@@ -1,6 +1,6 @@
 package graft.facade
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.ByteBuffer
 import java.util.concurrent.Executors
@@ -141,8 +141,12 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
   }
 
   private def serve(sock: Socket): Unit = {
-    val in = new DataInputStream(sock.getInputStream)
-    val out = new DataOutputStream(sock.getOutputStream)
+    // one buffered write and flush per response frame, sent at once: with
+    // Nagle on, the second small write of a frame would wait for the
+    // client's delayed ACK (about 40 ms) whenever the answer is fast
+    sock.setTcpNoDelay(true)
+    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+    val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
     val conn = new ConnState(authRequired)
     try {
       while (running) {

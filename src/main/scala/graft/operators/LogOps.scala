@@ -26,10 +26,24 @@ object LogOps {
   def fetchRange(log: DataFrame, fetchOffset: Long, highWatermark: Long): DataFrame =
     log.filter(col("offset") >= fetchOffset && col("offset") < highWatermark)
 
+  /** The fetch-budget size of one record, the `val_len` of
+    * [[fetchWithByteBudget]]: key + value bytes plus 16 bytes of
+    * per-record framing, so a compacted topic of tombstones (null values)
+    * still consumes budget and maxBytes stays effective.
+    */
+  val budgetBytes: Column =
+    coalesce(octet_length(col("key").cast("binary")), lit(0)) +
+      coalesce(octet_length(col("value").cast("binary")), lit(0)) + lit(16)
+
   /** P2/A4/W1 — byte-budget fetch: running byte sum per partition ordered by
     * offset, stop once the budget is exceeded (reference
     * `pg/record_fetch.sql:26,47`). The first batch is always returned even
     * if it alone exceeds the budget (Kafka semantics: progress guarantee).
+    *
+    * When `topic` and `partition` are literals (one Kafka partition, as
+    * `ParquetStorage.fetch` passes), the optimizer drops the window's
+    * partition spec and the window runs in one partition; an input that
+    * is already a single partition then needs no exchange.
     */
   def fetchWithByteBudget(log: DataFrame, fetchOffset: Long, maxBytes: Long): DataFrame = {
     val w = Window.partitionBy(tp: _*).orderBy(col("offset"))

@@ -15,7 +15,12 @@ import graft.lake.{Lake, TxLog}
   *
   *  - one batch object per produce at
   *    `log/<topic>/<partition %010d>/<baseOffset %020d>.parquet`
-  *    (reference key scheme `dynostore.rs:992-995`)
+  *    (reference key scheme `dynostore.rs:992-995`); the object holds
+  *    offsets `[its base, the next object's base)`. A produced object
+  *    also carries `_budget_bytes`, the sum of its records' fetch-budget
+  *    sizes ([[LogOps.budgetBytes]]), published with it by the same
+  *    rename; Spark's file index skips underscore names. produceAll
+  *    output, control markers and maintenance segments carry none.
   *  - `watermark.json` per partition updated by compare-and-swap via
   *    atomic rename (the OptiCon conditional-PUT analog,
   *    `dynostore/opticon.rs:232-320`) — offsets are assigned exactly once
@@ -27,6 +32,19 @@ import graft.lake.{Lake, TxLog}
   * On a real cluster the same layout runs against S3/HDFS paths and the
   * watermark CAS becomes a Delta/Iceberg commit; file-per-batch keeps
   * offset-range fetches prunable by filename without reading data.
+  *
+  * Fetch selection (reference `dynostore.rs:1018-1139`): a fetch of
+  * `[from, end)` under `maxBytes` reads only
+  *  - objects from the last one whose base <= `from` (every earlier one
+  *    ends at or below `from`),
+  *  - with base < `end` (a later one holds nothing below `end`),
+  *  - until the recorded budget bytes of the objects after the first
+  *    that lie wholly below `end` reach `maxBytes`. All their rows come
+  *    before any later row in the byte-budget window, so every later
+  *    row's running sum starts at or past `maxBytes` and the window
+  *    drops it. A missing record counts as 0, which only reads more.
+  * Every row of the full-log answer lies in the selection, so the
+  * answer is unchanged.
   */
 final class ParquetStorage(spark: SparkSession, root: String,
                            registry: Option[SchemaRegistry] = None,
@@ -283,9 +301,10 @@ final class ParquetStorage(spark: SparkSession, root: String,
     }
 
     // ONE validation+sizing job (reference dynostore.rs:885-898 validates,
-    // then sizes): per-input-partition row counts and invalid counts in a
-    // single aggregate. The per-partition counts let the write job assign
-    // offsets map-side below — no global sort, no extra count jobs.
+    // then sizes): per-input-partition row counts, invalid counts and
+    // fetch-budget bytes in a single aggregate. The per-partition counts
+    // let the write job assign offsets map-side below — no global sort,
+    // no extra count jobs.
     // a misconfigured (unparseable) schema rejects the batch with an
     // error code — never an exception that drops the client connection
     val schema =
@@ -296,7 +315,8 @@ final class ParquetStorage(spark: SparkSession, root: String,
         maxMessageBytes(tp.topic))
       .groupBy(spark_partition_id().as("__pid"))
       .agg(count(lit(1)).as("__cnt"), count_if(col("__invalid")).as("__bad"),
-        count_if(col("__toolarge")).as("__big"))
+        count_if(col("__toolarge")).as("__big"),
+        sum(LogOps.budgetBytes).as("__bytes"))
       .collect()
     if (stats.map(_.getAs[Long]("__big")).sum > 0)
       return Left(ErrorCode.MessageTooLarge)
@@ -347,10 +367,12 @@ final class ParquetStorage(spark: SparkSession, root: String,
 
     // write to a temp dir, then atomic-rename to publish — readers never
     // see a half-written batch (the PutMode::Create analog,
-    // dynostore.rs:992-1014)
+    // dynostore.rs:992-1014); the budget record rides in the same rename
     if (!lakeOnly) {
       val tmpDir = f"${partDir(tp)}/.tmp_$base%020d"
       withOffsets.coalesce(1).write.mode("overwrite").parquet(tmpDir)
+      Files.writeString(Paths.get(tmpDir, BudgetRecord),
+        stats.map(_.getAs[Long]("__bytes")).sum.toString)
       Files.move(Paths.get(tmpDir),
         Paths.get(f"${partDir(tp)}/$base%020d.parquet"),
         StandardCopyOption.ATOMIC_MOVE)
@@ -565,43 +587,66 @@ final class ParquetStorage(spark: SparkSession, root: String,
 
   private def logDf(tp: Topition): DataFrame = {
     ensureSwapRecovered(tp) // finish any interrupted maintenance swap first
-    val dir = partDir(tp)
-    import scala.jdk.CollectionConverters._
-    val files = listDir(Paths.get(dir)).iterator
-      .filter(p => p.toString.endsWith(".parquet") &&
-        !p.getFileName.toString.startsWith("."))
-      .map(_.toString).toSeq
+    readLog(batchFiles(tp))
+  }
+
+  /** Batch objects read with the known log schema: no footer-inference
+    * job, and objects written before a column existed read it as null.
+    */
+  private def readLog(files: Seq[java.nio.file.Path]): DataFrame =
     if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.model.Model.logSchema)
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        logSchema)
     else
-      // a lazily-executed fetch plan can outlive a concurrent
-      // maintenance swap that replaced these files; read-missing-as-
-      // empty turns that race into a transient short read the consumer
-      // retries (offsets only advance on delivery), never a dead job
-      spark.read.option("ignoreMissingFiles", "true").parquet(files: _*)
+      // a lazily-executed read can outlive a concurrent maintenance swap
+      // or DeleteRecords that removed these files; read-missing-as-empty
+      // turns that race into a transient short read the consumer retries
+      // (offsets only advance on delivery), never a dead job
+      spark.read.schema(logSchema).option("ignoreMissingFiles", "true")
+        .parquet(files.map(_.toString): _*)
+
+  /** Name of the budget-bytes record inside a produced batch object. */
+  private final val BudgetRecord = "_budget_bytes"
+
+  private def recordedBytes(obj: java.nio.file.Path): Long =
+    try Files.readString(obj.resolve(BudgetRecord)).trim.toLong
+    catch { case _: java.io.IOException | _: NumberFormatException => 0L }
+
+  /** The batch objects that can hold the answer of a fetch of
+    * `[from, end)` under `maxBytes` — the selection rule and its safety
+    * argument are in the class comment.
+    */
+  private def fetchObjects(files: Seq[java.nio.file.Path], from: Long,
+                           end: Long, maxBytes: Long): Seq[java.nio.file.Path] = {
+    if (from >= end) return Nil
+    val bases = files.map(baseOf)
+    val first = math.max(0, bases.lastIndexWhere(_ <= from))
+    val picked = Seq.newBuilder[java.nio.file.Path]
+    var i = first
+    var bytes = 0L
+    while (i < files.length && bases(i) < end && bytes < maxBytes) {
+      picked += files(i)
+      if (i > first && i + 1 < files.length && bases(i + 1) <= end)
+        bytes += recordedBytes(files(i))
+      i += 1
+    }
+    picked.result()
   }
 
   override def fetch(tp: Topition, fetchOffset: Long, maxBytes: Long,
                      readCommitted: Boolean): DataFrame = {
     val stage = offsetStage(tp)
     val end = if (readCommitted) stage.lastStable else stage.highWatermark
-    val df0 = logDf(tp)
-    // P4 — control-batch filter: txn commit/abort markers occupy offsets
-    // but are never handed to consumers (reference record_fetch semantics)
-    val dataOnly =
-      if (df0.columns.contains("is_control")) df0.filter(!col("is_control"))
-      else df0
-    val ranged = dataOnly
-      .filter(col("offset") >= math.max(fetchOffset, logStart(tp)) &&
-        col("offset") < end)
-      // budget = key + value + per-record framing overhead: a compacted
-      // topic of tombstones (null values) must still consume budget, or
-      // maxBytes is ineffective and the facade's collect() is unbounded
-      .withColumn("val_len",
-        coalesce(octet_length(col("key").cast("binary")), lit(0)) +
-          coalesce(octet_length(col("value").cast("binary")), lit(0)) +
-          lit(16))
+    val from = math.max(fetchOffset, stage.logStart)
+    ensureSwapRecovered(tp)
+    val ranged = readLog(fetchObjects(batchFiles(tp), from, end, maxBytes))
+      // P4 — control-batch filter: txn commit/abort markers occupy offsets
+      // but are never handed to consumers (reference record_fetch semantics)
+      .filter(!col("is_control") && col("offset") >= from && col("offset") < end)
+      // the window runs in one partition anyway (literal partition spec):
+      // reading into one keeps it free of an exchange
+      .coalesce(1)
+      .withColumn("val_len", LogOps.budgetBytes)
     LogOps.fetchWithByteBudget(
       ranged.withColumn("topic", lit(tp.topic))
         .withColumn("partition", lit(tp.partition)),
@@ -642,11 +687,8 @@ final class ParquetStorage(spark: SparkSession, root: String,
   override def deleteRecords(tp: Topition, beforeOffset: Long): Long = {
     ensureSwapRecovered(tp)
     val cut = math.min(beforeOffset, offsetStage(tp).highWatermark)
-    import scala.jdk.CollectionConverters._
-    val files = listDir(Paths.get(partDir(tp))).iterator
-      .filter(p => p.getFileName.toString.matches("\\d{20}\\.parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
-    val bases = files.map(_.getFileName.toString.stripSuffix(".parquet").toLong)
+    val files = batchFiles(tp)
+    val bases = files.map(baseOf)
     files.zip(bases).zipWithIndex.foreach { case ((f, _), i) =>
       val end = if (i + 1 < bases.length) bases(i + 1)
                 else offsetStage(tp).highWatermark
@@ -1398,9 +1440,8 @@ final class ParquetStorage(spark: SparkSession, root: String,
     */
   private def writeControlMarker(tp: Topition, producerId: Long,
                                  commit: Boolean): Unit = {
-    val schema = logDf(tp).schema
     val offset = reserveOffsets(tp, 1)
-    val vals: Array[Any] = schema.fields.map { f =>
+    val vals: Array[Any] = logSchema.fields.map { f =>
       f.name match {
         case "offset" => offset
         case "topic" => tp.topic
@@ -1417,7 +1458,7 @@ final class ParquetStorage(spark: SparkSession, root: String,
     val row: org.apache.spark.sql.Row =
       org.apache.spark.sql.Row.fromSeq(vals.toIndexedSeq)
     val df = spark.createDataFrame(
-      java.util.Collections.singletonList(row), schema)
+      java.util.Collections.singletonList(row), logSchema)
     val tmpDir = f"${partDir(tp)}/.tmp_$offset%020d"
     df.coalesce(1).write.mode("overwrite").parquet(tmpDir)
     Files.move(Paths.get(tmpDir), Paths.get(f"${partDir(tp)}/$offset%020d.parquet"),
@@ -1441,9 +1482,7 @@ final class ParquetStorage(spark: SparkSession, root: String,
     * most once per partition per process, only on the idempotent path.
     */
   private def recoverProducerSeqs(tp: Topition): Unit = {
-    val df = logDf(tp)
-    if (!df.columns.contains("producer_id")) return
-    val rows = df
+    val rows = logDf(tp)
       .filter(col("producer_id") >= 0 && !col("is_control") &&
         col("base_sequence") >= 0)
       .groupBy(col("producer_id"), col("producer_epoch"), col("base_sequence"))
@@ -1465,11 +1504,9 @@ final class ParquetStorage(spark: SparkSession, root: String,
   private val recoveredSeqs = TrieMap.empty[Topition, Boolean]
 
   private def recoverAbortedRanges(tp: Topition): Unit = {
-    val df = logDf(tp)
-    if (!df.columns.contains("is_control")) return
     val known = abortedRanges.getOrElse(tp, Vector.empty)
       .map(r => (r.producerId, r.offsetStart, r.offsetEnd)).toSet
-    val fromLog = LogOps.abortedRangesFromLog(df).collect().toSeq
+    val fromLog = LogOps.abortedRangesFromLog(logDf(tp)).collect().toSeq
       .map(r => TxnRange(r.getAs[Long]("producer_id"), tp.topic, tp.partition,
         r.getAs[Long]("offset_start"), r.getAs[Long]("offset_end"),
         TxnState.Aborted))
@@ -1596,6 +1633,9 @@ final class ParquetStorage(spark: SparkSession, root: String,
     }
   }
 
+  private def baseOf(obj: java.nio.file.Path): Long =
+    obj.getFileName.toString.stripSuffix(".parquet").toLong
+
   private def deleteRecursive(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
@@ -1621,12 +1661,10 @@ final class ParquetStorage(spark: SparkSession, root: String,
     allTps.foreach { tp => swapRecovered.put(tp, true); recoverMaintainSwap(tp) }
     val filesByTp = allTps.map(tp => tp -> batchFiles(tp)).filter(_._2.nonEmpty)
     if (filesByTp.isEmpty) return
-    // ignoreMissingFiles: a concurrent DeleteRecords can remove a listed
-    // batch file before the rewrite job scans it — the same race logDf
-    // guards; a missing file is a shorter input, not a dead maintenance
-    // tick for every topic
-    var df = spark.read.option("ignoreMissingFiles", "true")
-      .parquet(filesByTp.flatMap(_._2).map(_.toString): _*)
+    // readLog ignores missing files: a concurrent DeleteRecords can remove
+    // a listed batch file before the rewrite job scans it; a missing file
+    // is a shorter input, not a dead maintenance tick for every topic
+    var df = readLog(filesByTp.flatMap(_._2))
     // injected clock, not wall time — retention is deterministic under
     // test and replayable in maintenance backfills
     if (policy.contains("delete")) retentionMs.foreach { r =>

@@ -2318,4 +2318,43 @@ class BrokerServerSpec extends SparkSpec {
       sock.close()
     } finally broker.close()
   }
+
+  test("fast round trips stay fast: 50 sequential OffsetCommit v8 in under 1 s") {
+    val root = java.nio.file.Files.createTempDirectory("graft-broker-rtt").toString
+    val storage = new ParquetStorage(spark, root)
+    storage.createTopic("rtt", 1)
+    val broker = new BrokerServer(storage)
+    val sock = new Socket("127.0.0.1", broker.boundPort)
+    try {
+      // the client sends each frame in ONE write with Nagle off, so any
+      // stall left is the broker's
+      sock.setTcpNoDelay(true)
+      val out = sock.getOutputStream
+      val in = new DataInputStream(sock.getInputStream)
+      def commit(corr: Int): Unit = {
+        val buf = ByteBuffer.allocate(1 << 16)
+        buf.putInt(0) // frame length, patched below
+        buf.putShort(8).putShort(8).putInt(corr)
+        W.writeString(buf, "graft-test")
+        graft.functions.Varint.writeUnsignedVarint(0, buf) // no tagged fields
+        W.writeOffsetCommit(buf, W.OffsetCommitRequest("rtt-g", Seq(
+          W.CommitTopic("rtt", Seq(W.CommitPartition(0, corr.toLong, ""))))), 8)
+        buf.putInt(0, buf.position() - 4)
+        out.write(buf.array(), 0, buf.position())
+        out.flush()
+        val resp = new Array[Byte](in.readInt())
+        in.readFully(resp)
+        val r = ByteBuffer.wrap(resp)
+        assert(r.getInt === corr)
+        W.skipTaggedFields(r)
+        assert(W.readOffsetCommitResponse(r, 8) === Seq("rtt" -> Seq((0, 0.toShort))))
+      }
+      commit(0) // warm-up: first touch of the group's storage
+      val t0 = System.nanoTime()
+      (1 to 50).foreach(commit)
+      val ms = (System.nanoTime() - t0) / 1000000
+      assert(ms < 1000, s"50 OffsetCommit round trips took $ms ms")
+      assert(storage.offsetFetch("rtt-g", graft.model.Model.Topition("rtt", 0)) === Some(50L))
+    } finally { sock.close(); broker.close() }
+  }
 }

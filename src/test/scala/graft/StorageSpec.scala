@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.model.Model._
+import graft.operators.LogOps
 import graft.storage.ParquetStorage
 import graft.schema.SchemaRegistry
 
@@ -700,5 +701,116 @@ class StorageSpec extends SparkSpec {
       val st2 = new ParquetStorage(spark, root)
       assert(st2.partitionCount("grow") === 18)
     } finally pool.shutdownNow()
+  }
+
+  // ------------------------------------------------ pruned fetch selection
+
+  private def kib(n: Int, from: Int) = {
+    val rnd = new scala.util.Random(from)
+    (from until from + n).map { i =>
+      val v = new Array[Byte](1024)
+      rnd.nextBytes(v)
+      (java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), s"k$i", v)
+    }.toDF("timestamp", "key", "value")
+  }
+
+  private def batchObjects(st: ParquetStorage, tp: Topition) = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(st.fetchLogDir(tp)))
+    try s.iterator().asScala.filter(_.getFileName.toString.matches("\\d{20}\\.parquet"))
+      .toSeq.sortBy(_.getFileName.toString)
+    finally s.close()
+  }
+
+  private def fetchedRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("offset", "timestamp", "key", "value").orderBy("offset").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1),
+        Option(r.getAs[Array[Byte]](2)).map(_.toSeq),
+        Option(r.getAs[Array[Byte]](3)).map(_.toSeq))).toSeq
+
+  /** Every fetch on a grid of offsets (batch boundaries, mid-batch, the
+    * tail, past the high watermark) and budgets equals the byte-budget
+    * window over ALL batch objects of the partition.
+    */
+  private def assertFetchIsFullLogAnswer(st: ParquetStorage, tp: Topition,
+                                         stage: String,
+                                         isolations: Seq[Boolean] = Seq(false)): Unit = {
+    val objects = batchObjects(st, tp)
+    val log = spark.read.schema(logSchema).parquet(objects.map(_.toString): _*).cache()
+    try {
+      val os = st.offsetStage(tp)
+      val bases = objects.map(_.getFileName.toString.stripSuffix(".parquet").toLong)
+      val offsets = (bases.flatMap(b => Seq(b, b + 5)) ++ Seq(0L,
+        os.highWatermark - 1, os.highWatermark, os.highWatermark + 3)).distinct.sorted
+      for (readCommitted <- isolations; from <- offsets;
+           maxBytes <- Seq(1L, 1043L, 64L * 1024, Long.MaxValue)) {
+        val end = if (readCommitted) os.lastStable else os.highWatermark
+        val want = fetchedRows(LogOps.fetchWithByteBudget(
+          log.filter(!col("is_control") && col("offset") < end &&
+            col("offset") >= math.max(from, os.logStart))
+            .withColumn("val_len", LogOps.budgetBytes), from, maxBytes))
+        val got = fetchedRows(st.fetch(tp, from, maxBytes, readCommitted))
+        assert(got === want,
+          s"$stage: fetch($from, $maxBytes, readCommitted=$readCommitted)")
+      }
+    } finally { log.unpersist(); () }
+  }
+
+  test("pruned fetch returns the full-log answer: open txn, marker, deleteRecords, no records, maintain") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 1, Map(ConfigKey.CleanupPolicy -> "compact",
+      ConfigKey.SegmentRows -> "25"))
+    (0 until 3).foreach(b => assert(st.produce(tp, kib(10, b * 10)).isRight))
+    val (pid, _) = st.initProducer("tx-prune")
+    st.txnBegin(pid, tp)
+    (0 until 2).foreach(b => assert(st.produce(tp, kib(10, 30 + b * 10),
+      producerId = pid, producerEpoch = 0, baseSequence = b * 10).isRight))
+    (0 until 2).foreach(b => assert(st.produce(tp, kib(10, 50 + b * 10)).isRight))
+    assert(st.offsetStage(tp).lastStable === 30L)
+    assertFetchIsFullLogAnswer(st, tp, "open txn", Seq(false, true))
+
+    assert(st.txnEnd(pid, commit = false) === ErrorCode.None) // marker at 70
+    (0 until 2).foreach(b => assert(st.produce(tp, kib(10, 71 + b * 10)).isRight))
+    assertFetchIsFullLogAnswer(st, tp, "control marker mid-log")
+
+    st.deleteRecords(tp, 25)
+    assertFetchIsFullLogAnswer(st, tp, "after deleteRecords")
+
+    batchObjects(st, tp).foreach(o =>
+      java.nio.file.Files.deleteIfExists(o.resolve("_budget_bytes")))
+    assertFetchIsFullLogAnswer(st, tp, "budget records deleted")
+
+    st.maintain()
+    (0 until 2).foreach(b => assert(st.produce(tp, kib(10, 91 + b * 10)).isRight))
+    assertFetchIsFullLogAnswer(st, tp, "after maintain")
+  }
+
+  test("a 64 KiB fetch over 24 batch objects is one Spark job over at most 3 objects") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 1)
+    (0 until 24).foreach(b => assert(st.produce(tp, kib(50, b * 50)).isRight))
+    val group = "pruned-fetch-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    Seq(0L, 625L).foreach { from =>
+      jobs.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, "pruned fetch")
+      val df = try {
+        val df = st.fetch(tp, from, 64L * 1024)
+        assert(df.collect().map(_.getAs[Long]("offset")).min === from)
+        df
+      } finally spark.sparkContext.clearJobGroup()
+      Thread.sleep(500) // let listener events drain
+      spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get() === 1, s"fetch($from): ${jobs.get()} jobs")
+      assert(df.inputFiles.length <= 3, df.inputFiles.mkString(", "))
+    }
   }
 }
