@@ -3,9 +3,9 @@ package graft.facade
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.ByteBuffer
-import java.util.concurrent.Executors
+import java.util.concurrent.{ArrayBlockingQueue, Executors}
 import scala.util.control.NonFatal
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
 import graft.functions.RecordBatchCodec
 import graft.model.Model.{ErrorCode, Topition}
 import graft.storage.Storage
@@ -215,7 +215,7 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
           throw new UnsupportedOperationException(
             s"api ${header.apiKey} v${header.apiVersion} not served")
       }
-    val out = ByteBuffer.allocate(responseCapacity(header, buf))
+    val out = responseBuffer(responseCapacity(header, buf))
     // flexible versions use response header v1 (correlation id + tagged
     // fields); ApiVersions is the protocol-mandated exception (always
     // header v0 so a confused client can still parse the downgrade), and
@@ -861,7 +861,19 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
     used.flip()
     val a = new Array[Byte](used.remaining())
     used.get(a)
+    if (out.capacity == DefaultResponseCapacity) spareResponseBuffers.offer(out)
     a
+  }
+
+  // Default-size response buffers are reused, a few spares kept: a fresh
+  // 4 MiB array per request is a humongous allocation per round trip, and
+  // at a few hundred requests a second its collections set the pace.
+  private final val DefaultResponseCapacity = 1 << 22
+  private val spareResponseBuffers = new ArrayBlockingQueue[ByteBuffer](8)
+
+  private def responseBuffer(capacity: Int): ByteBuffer = {
+    val spare = if (capacity == DefaultResponseCapacity) spareResponseBuffers.poll() else null
+    if (spare == null) ByteBuffer.allocate(capacity) else spare.clear()
   }
 
   /** Fetch responses scale with the request's max_bytes — a fixed buffer
@@ -875,8 +887,8 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
     if (header.apiKey == 1 && buf.remaining() >= 16) {
       val maxBytes = buf.getInt(buf.position() + 12)
       val want = math.max(maxBytes.toLong, 0L) + (1 << 16)
-      math.max(1 << 22, math.min(want, 512L << 20)).toInt
-    } else 1 << 22
+      math.max(DefaultResponseCapacity, math.min(want, 512L << 20)).toInt
+    } else DefaultResponseCapacity
 
   /** Coordinator state → the Kafka group-state string of the admin APIs. */
   private def groupKafkaState(g: String): String =
@@ -1217,48 +1229,42 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
     writeListOffsetsResponse(out, results, version)
   }
 
-  /** One partition's records (maxBytes-bounded by the byte-budget
-    * operator — collect() is safe by construction) re-encoded as a
-    * magic-v2 wire batch.
+  /** One partition's records (maxBytes-bounded by the storage fetch, so
+    * holding them is safe by construction) as a magic-v2 wire batch. The
+    * fetch's local answer is read as it is: a select or collect over it
+    * would run Catalyst and a SQL execution per request.
     */
   private def fetchRecords(tp: Topition, fetchOffset: Long, maxBytes: Long,
                            readCommitted: Boolean): Array[Byte] = {
     val fetched = storage.fetch(tp, fetchOffset, maxBytes, readCommitted)
+    val Seq(offsetCol, tsCol, keyCol, valueCol, pidCol) =
+      Seq("offset", "timestamp", "key", "value", "producer_id").map(fetched.schema.fieldIndex)
     // read_committed filtering happens SERVER-side: the re-encoded wire
     // batch carries producerId=-1 and no control batches, so a Kafka
     // client's own abort filter (which matches aborted pid ranges
     // against each batch's producerId) would match nothing — aborted
     // rows must never reach the response
-    val visible =
-      if (!readCommitted) fetched
-      else storage.abortedTxns(tp, fetchOffset, Long.MaxValue) match {
-        case aborted if aborted.nonEmpty =>
-          val inAborted = aborted.map(r =>
-            col("producer_id") === r.producerId &&
-              col("offset") >= r.offsetStart &&
-              col("offset") <= r.offsetEnd).reduce(_ || _)
-          fetched.filter(!inAborted)
-        case _ => fetched
+    val aborted =
+      if (readCommitted) storage.abortedTxns(tp, fetchOffset, Long.MaxValue) else Nil
+    val rows = org.apache.spark.sql.graftshim.LocalParquet.rows(fetched)
+      .filterNot { r =>
+        val offset = r.getLong(offsetCol)
+        aborted.exists(a => r.getLong(pidCol) == a.producerId &&
+          offset >= a.offsetStart && offset <= a.offsetEnd)
       }
-    val rows = visible
-      .select(col("offset"), col("timestamp"), col("key").cast("binary"),
-        col("value").cast("binary"))
-      .orderBy("offset").collect()
+      .sortBy(_.getLong(offsetCol))
+    def millis(r: InternalRow) = Math.floorDiv(r.getLong(tsCol), 1000L)
+    def bytes(r: InternalRow, i: Int) = if (r.isNullAt(i)) null else r.getBinary(i)
     if (rows.isEmpty) Array.empty[Byte]
     else {
-      val base = rows.head.getLong(0)
-      val baseTs = rows.head.getTimestamp(1).getTime
+      val base = rows.head.getLong(offsetCol)
+      val baseTs = millis(rows.head)
       RecordBatchCodec.encode(RecordBatchCodec.Batch(
-        base, 0, 0, baseTs,
-        rows.last.getTimestamp(1).getTime, -1L, -1, -1,
+        base, 0, 0, baseTs, millis(rows.last), -1L, -1, -1,
         rows.map { r =>
-          RecordBatchCodec.Record(
-            (r.getLong(0) - base).toInt,
-            r.getTimestamp(1).getTime - baseTs,
-            if (r.isNullAt(2)) null else r.getAs[Array[Byte]](2),
-            if (r.isNullAt(3)) null else r.getAs[Array[Byte]](3),
-            Nil)
-        }.toSeq))
+          RecordBatchCodec.Record((r.getLong(offsetCol) - base).toInt,
+            millis(r) - baseTs, bytes(r, keyCol), bytes(r, valueCol), Nil)
+        }))
     }
   }
 

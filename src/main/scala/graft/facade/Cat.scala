@@ -87,7 +87,7 @@ object Cat {
   }
 
   // collect() is safe by construction: each per-partition fetch is
-  // maxBytes-bounded by the byte-budget operator, so the union is too —
+  // maxBytes-bounded by the storage fetch, so the union is too —
   // this is a CLI tail, not an analytic path
   def consumeJson(storage: Storage, topic: String, partitions: Int): Seq[String] =
     consume(storage, topic, partitions)

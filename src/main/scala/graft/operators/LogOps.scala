@@ -29,7 +29,8 @@ object LogOps {
   /** The fetch-budget size of one record, the `val_len` of
     * [[fetchWithByteBudget]]: key + value bytes plus 16 bytes of
     * per-record framing, so a compacted topic of tombstones (null values)
-    * still consumes budget and maxBytes stays effective.
+    * still consumes budget and maxBytes stays effective;
+    * `ParquetStorage.fetch` counts the same size per row.
     */
   val budgetBytes: Column =
     coalesce(octet_length(col("key").cast("binary")), lit(0)) +
@@ -40,10 +41,9 @@ object LogOps {
     * `pg/record_fetch.sql:26,47`). The first batch is always returned even
     * if it alone exceeds the budget (Kafka semantics: progress guarantee).
     *
-    * When `topic` and `partition` are literals (one Kafka partition, as
-    * `ParquetStorage.fetch` passes), the optimizer drops the window's
-    * partition spec and the window runs in one partition; an input that
-    * is already a single partition then needs no exchange.
+    * The reference definition of a fetch answer and the board's operator
+    * over a log table; `ParquetStorage.fetch` streams the same window on
+    * the driver and stops reading where it ends (the specs compare them).
     */
   def fetchWithByteBudget(log: DataFrame, fetchOffset: Long, maxBytes: Long): DataFrame = {
     val w = Window.partitionBy(tp: _*).orderBy(col("offset"))

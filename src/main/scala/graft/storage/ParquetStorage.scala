@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import graft.model.Model._
 import graft.operators.LogOps
@@ -16,11 +17,8 @@ import graft.lake.{Lake, TxLog}
   *  - one batch object per produce at
   *    `log/<topic>/<partition %010d>/<baseOffset %020d>.parquet`
   *    (reference key scheme `dynostore.rs:992-995`); the object holds
-  *    offsets `[its base, the next object's base)`. A produced object
-  *    also carries `_budget_bytes`, the sum of its records' fetch-budget
-  *    sizes ([[LogOps.budgetBytes]]), published with it by the same
-  *    rename; Spark's file index skips underscore names. produceAll
-  *    output, control markers and maintenance segments carry none.
+  *    offsets `[its base, the next object's base)` in ascending order
+  *    within each data file (every writer orders within its write task)
   *  - `watermark.json` per partition updated by compare-and-swap via
   *    atomic rename (the OptiCon conditional-PUT analog,
   *    `dynostore/opticon.rs:232-320`) — offsets are assigned exactly once
@@ -33,18 +31,20 @@ import graft.lake.{Lake, TxLog}
   * watermark CAS becomes a Delta/Iceberg commit; file-per-batch keeps
   * offset-range fetches prunable by filename without reading data.
   *
-  * Fetch selection (reference `dynostore.rs:1018-1139`): a fetch of
-  * `[from, end)` under `maxBytes` reads only
-  *  - objects from the last one whose base <= `from` (every earlier one
-  *    ends at or below `from`),
-  *  - with base < `end` (a later one holds nothing below `end`),
-  *  - until the recorded budget bytes of the objects after the first
-  *    that lie wholly below `end` reach `maxBytes`. All their rows come
-  *    before any later row in the byte-budget window, so every later
-  *    row's running sum starts at or past `maxBytes` and the window
-  *    drops it. A missing record counts as 0, which only reads more.
-  * Every row of the full-log answer lies in the selection, so the
-  * answer is unchanged.
+  * Fetch (reference `dynostore.rs:1018-1139`) answers on the calling
+  * thread with no Spark job: a fetch of `[from, end)` under `maxBytes`
+  * reads the objects in base order through Spark's Parquet reader, from
+  * the last one whose base <= `from`, skips control markers and offsets
+  * below `from`, and stops at the first offset >= `end` or once the kept
+  * rows' sizes ([[LogOps.budgetBytes]]) reach `maxBytes`. Offsets ascend
+  * across the read, so this is the byte-budget window
+  * ([[LogOps.fetchWithByteBudget]]) over the whole log and no object past
+  * the answer is opened; an offset that does not ascend throws. Memory
+  * is the answer plus one reader batch. An object removed by a
+  * concurrent maintenance swap or DeleteRecords reads as empty and ends
+  * the answer: a short read the consumer retries, never a gap. The
+  * `_budget_bytes` records older versions wrote are skipped, like every
+  * underscore name.
   */
 final class ParquetStorage(spark: SparkSession, root: String,
                            registry: Option[SchemaRegistry] = None,
@@ -301,8 +301,8 @@ final class ParquetStorage(spark: SparkSession, root: String,
     }
 
     // ONE validation+sizing job (reference dynostore.rs:885-898 validates,
-    // then sizes): per-input-partition row counts, invalid counts and
-    // fetch-budget bytes in a single aggregate. The per-partition counts
+    // then sizes): per-input-partition row counts and invalid counts in a
+    // single aggregate. The per-partition counts
     // let the write job assign offsets map-side below — no global sort,
     // no extra count jobs.
     // a misconfigured (unparseable) schema rejects the batch with an
@@ -315,8 +315,7 @@ final class ParquetStorage(spark: SparkSession, root: String,
         maxMessageBytes(tp.topic))
       .groupBy(spark_partition_id().as("__pid"))
       .agg(count(lit(1)).as("__cnt"), count_if(col("__invalid")).as("__bad"),
-        count_if(col("__toolarge")).as("__big"),
-        sum(LogOps.budgetBytes).as("__bytes"))
+        count_if(col("__toolarge")).as("__big"))
       .collect()
     if (stats.map(_.getAs[Long]("__big")).sum > 0)
       return Left(ErrorCode.MessageTooLarge)
@@ -367,12 +366,10 @@ final class ParquetStorage(spark: SparkSession, root: String,
 
     // write to a temp dir, then atomic-rename to publish — readers never
     // see a half-written batch (the PutMode::Create analog,
-    // dynostore.rs:992-1014); the budget record rides in the same rename
+    // dynostore.rs:992-1014)
     if (!lakeOnly) {
       val tmpDir = f"${partDir(tp)}/.tmp_$base%020d"
       withOffsets.coalesce(1).write.mode("overwrite").parquet(tmpDir)
-      Files.writeString(Paths.get(tmpDir, BudgetRecord),
-        stats.map(_.getAs[Long]("__bytes")).sum.toString)
       Files.move(Paths.get(tmpDir),
         Paths.get(f"${partDir(tp)}/$base%020d.parquet"),
         StandardCopyOption.ATOMIC_MOVE)
@@ -605,33 +602,13 @@ final class ParquetStorage(spark: SparkSession, root: String,
       spark.read.schema(logSchema).option("ignoreMissingFiles", "true")
         .parquet(files.map(_.toString): _*)
 
-  /** Name of the budget-bytes record inside a produced batch object. */
-  private final val BudgetRecord = "_budget_bytes"
-
-  private def recordedBytes(obj: java.nio.file.Path): Long =
-    try Files.readString(obj.resolve(BudgetRecord)).trim.toLong
-    catch { case _: java.io.IOException | _: NumberFormatException => 0L }
-
-  /** The batch objects that can hold the answer of a fetch of
-    * `[from, end)` under `maxBytes` — the selection rule and its safety
-    * argument are in the class comment.
-    */
-  private def fetchObjects(files: Seq[java.nio.file.Path], from: Long,
-                           end: Long, maxBytes: Long): Seq[java.nio.file.Path] = {
-    if (from >= end) return Nil
-    val bases = files.map(baseOf)
-    val first = math.max(0, bases.lastIndexWhere(_ <= from))
-    val picked = Seq.newBuilder[java.nio.file.Path]
-    var i = first
-    var bytes = 0L
-    while (i < files.length && bases(i) < end && bytes < maxBytes) {
-      picked += files(i)
-      if (i > first && i + 1 < files.length && bases(i + 1) <= end)
-        bytes += recordedBytes(files(i))
-      i += 1
-    }
-    picked.result()
-  }
+  /** Driver-side reader of batch objects, built on first fetch. */
+  private lazy val objectReader =
+    new org.apache.spark.sql.graftshim.LocalParquet(spark, logSchema)
+  private val OffsetCol = logSchema.fieldIndex("offset")
+  private val KeyCol = logSchema.fieldIndex("key")
+  private val ValueCol = logSchema.fieldIndex("value")
+  private val ControlCol = logSchema.fieldIndex("is_control")
 
   override def fetch(tp: Topition, fetchOffset: Long, maxBytes: Long,
                      readCommitted: Boolean): DataFrame = {
@@ -639,18 +616,42 @@ final class ParquetStorage(spark: SparkSession, root: String,
     val end = if (readCommitted) stage.lastStable else stage.highWatermark
     val from = math.max(fetchOffset, stage.logStart)
     ensureSwapRecovered(tp)
-    val ranged = readLog(fetchObjects(batchFiles(tp), from, end, maxBytes))
-      // P4 — control-batch filter: txn commit/abort markers occupy offsets
-      // but are never handed to consumers (reference record_fetch semantics)
-      .filter(!col("is_control") && col("offset") >= from && col("offset") < end)
-      // the window runs in one partition anyway (literal partition spec):
-      // reading into one keeps it free of an exchange
-      .coalesce(1)
-      .withColumn("val_len", LogOps.budgetBytes)
-    LogOps.fetchWithByteBudget(
-      ranged.withColumn("topic", lit(tp.topic))
-        .withColumn("partition", lit(tp.partition)),
-      fetchOffset, maxBytes).drop("running_bytes", "val_len")
+    val answer = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    if (from < end && maxBytes > 0) {
+      val files = batchFiles(tp)
+      val bases = files.map(baseOf)
+      var i = math.max(0, bases.lastIndexWhere(_ <= from))
+      var last = Long.MinValue
+      var spent = 0L
+      // true while the answer may go on past this row
+      def visit(obj: java.nio.file.Path, row: InternalRow): Boolean = {
+        val offset = row.getLong(OffsetCol)
+        if (offset <= last) throw new IllegalStateException(
+          s"batch object $obj holds offset $offset after $last: offsets must ascend")
+        last = offset
+        if (offset >= end) false
+        // P4: txn commit/abort markers occupy offsets but are never handed
+        // to consumers (reference record_fetch semantics)
+        else if (offset < from || row.getBoolean(ControlCol)) true
+        else { // LogOps.budgetBytes
+          spent += (if (row.isNullAt(KeyCol)) 0 else row.getBinary(KeyCol).length) +
+            (if (row.isNullAt(ValueCol)) 0 else row.getBinary(ValueCol).length) + 16
+          answer += objectReader.keep(row)
+          spent < maxBytes
+        }
+      }
+      var more = true
+      while (more && i < files.length && bases(i) < end) {
+        // a missing object or file (a concurrent maintenance swap or
+        // DeleteRecords removed it) reads as empty and ends the answer
+        try scala.util.Using.resource(objectReader.open(files(i))) { rows =>
+          while (more && rows.hasNext) more = visit(files(i), rows.next())
+        } catch { case _: java.nio.file.NoSuchFileException |
+                       _: java.io.FileNotFoundException => more = false }
+        i += 1
+      }
+    }
+    objectReader.frame(answer.toSeq)
   }
 
   // ---------------------------------------------------------------- offsets

@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Spark's own `FileStreamSource` solves this with
   * `sparkSession.internalCreateDataFrame(rdd, schema,
   * isStreaming = true)` — `private[sql]` API, which is why this object
-  * lives under `org.apache.spark.sql`. Nothing else in the repo
-  * reaches into Spark internals.
+  * lives under `org.apache.spark.sql`. Nothing outside this package (and
+  * [[LocalParquet]], fetch's driver-side read) uses Spark internals.
   *
   * The WHOLE batch plan is compiled to one lazy RDD and that RDD
   * becomes the streaming leaf — flagging the original plan's own

@@ -2357,4 +2357,65 @@ class BrokerServerSpec extends SparkSpec {
       assert(storage.offsetFetch("rtt-g", graft.model.Model.Topition("rtt", 0)) === Some(50L))
     } finally { sock.close(); broker.close() }
   }
+
+  test("a wire fetch starts no Spark job or SQL execution, and its reused response buffer adds no bytes") {
+    val root = java.nio.file.Files.createTempDirectory("graft-broker-local").toString
+    val storage = new ParquetStorage(spark, root)
+    storage.createTopic("local", 1)
+    val broker = new BrokerServer(storage)
+    val sock = new Socket("127.0.0.1", broker.boundPort)
+    val value = (i: Int) => s"v$i-" + "x" * (i * 97)
+    // every frame holds exactly its response, whatever came before it on
+    // the connection
+    def fetch(from: Int, corr: Int): Unit = {
+      val fr = request(sock, 1, 4, corr) { b =>
+        W.writeFetch(b, W.FetchRequest(500, 1, 1 << 20, 0, Seq(
+          W.FetchTopic("local", Seq(W.FetchPartition(0, from.toLong, 1 << 20))))))
+      }
+      fr.getInt; fr.getInt; W.readString(fr); fr.getInt // throttle, topics, name, partitions
+      assert(fr.getInt === 0)
+      assert(fr.getShort === 0)
+      assert(fr.getLong === 12L)
+      fr.getLong; fr.getInt // lso, aborted count
+      val decoded = RecordBatchCodec.decode(W.readBytes(fr))
+      assert(fr.remaining() === 0)
+      assert(decoded.baseOffset === from.toLong)
+      assert(decoded.records.map(r => new String(r.value)) === (from until 12).map(value))
+    }
+    try {
+      (0 until 4).foreach { b =>
+        val batch = RecordBatchCodec.encode(RecordBatchCodec.Batch(
+          0L, 0, 0, 1704067200000L, 1704067200002L, -1L, -1, -1,
+          (0 until 3).map(i => RecordBatchCodec.Record(
+            i, i.toLong, s"k${b * 3 + i}".getBytes, value(b * 3 + i).getBytes, Nil))))
+        request(sock, 0, 3, b) { buf =>
+          W.writeProduce(buf, W.ProduceRequest(1, 30000, Seq(
+            W.ProduceTopic("local", Seq(W.ProducePartition(0, batch))))))
+        }
+      }
+      fetch(0, 99) // the partition's first fetch recovers its aborted ranges once
+      Thread.sleep(500) // let the produce and recovery jobs' listener events drain
+      val events = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          events.add(s"job ${js.jobId}"); ()
+        }
+        override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+          e match {
+            case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+              events.add(s"SQL execution ${x.description}"); ()
+            case _ =>
+          }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try (Seq(0, 11, 5, 0, 11) ++ (0 until 12)).zipWithIndex.foreach {
+        case (from, corr) => fetch(from, 100 + corr)
+      } finally {
+        Thread.sleep(500) // let listener events drain
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(events.isEmpty, events.toArray.mkString("; "))
+    } finally { sock.close(); broker.close() }
+  }
 }

@@ -714,19 +714,23 @@ class StorageSpec extends SparkSpec {
     }.toDF("timestamp", "key", "value")
   }
 
-  private def batchObjects(st: ParquetStorage, tp: Topition) = {
+  private def dirEntries(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(st.fetchLogDir(tp)))
-    try s.iterator().asScala.filter(_.getFileName.toString.matches("\\d{20}\\.parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
-    finally s.close()
+    val s = java.nio.file.Files.list(dir)
+    try s.iterator().asScala.toSeq.sortBy(_.getFileName.toString) finally s.close()
   }
 
+  private def batchObjects(st: ParquetStorage, tp: Topition) =
+    dirEntries(java.nio.file.Paths.get(st.fetchLogDir(tp)))
+      .filter(_.getFileName.toString.matches("\\d{20}\\.parquet"))
+
   private def fetchedRows(df: org.apache.spark.sql.DataFrame) =
-    df.select("offset", "timestamp", "key", "value").orderBy("offset").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1),
-        Option(r.getAs[Array[Byte]](2)).map(_.toSeq),
-        Option(r.getAs[Array[Byte]](3)).map(_.toSeq))).toSeq
+    localRows(df.select("offset", "timestamp", "key", "value").orderBy("offset").collect())
+
+  private def localRows(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getAs[Long]("offset"), r.getAs[java.sql.Timestamp]("timestamp"),
+      Option(r.getAs[Array[Byte]]("key")).map(_.toSeq),
+      Option(r.getAs[Array[Byte]]("value")).map(_.toSeq))).toSeq.sortBy(_._1)
 
   /** Every fetch on a grid of offsets (batch boundaries, mid-batch, the
     * tail, past the high watermark) and budgets equals the byte-budget
@@ -742,9 +746,20 @@ class StorageSpec extends SparkSpec {
       val bases = objects.map(_.getFileName.toString.stripSuffix(".parquet").toLong)
       val offsets = (bases.flatMap(b => Seq(b, b + 5)) ++ Seq(0L,
         os.highWatermark - 1, os.highWatermark, os.highWatermark + 3)).distinct.sorted
+      val sized = log.filter(!col("is_control"))
+        .select(col("offset"), LogOps.budgetBytes).collect()
+        .map(r => (r.getLong(0), r.getInt(1).toLong)).sortBy(_._1)
+      // budgets that end exactly on the first two object boundaries
+      def boundaryBudgets(from: Long, end: Long): Seq[Long] = {
+        val rows = sized.filter { case (o, _) =>
+          o >= math.max(from, os.logStart) && o < end }
+        bases.filter(b => rows.exists(_._1 < b)).take(2)
+          .map(b => rows.filter(_._1 < b).map(_._2).sum)
+      }
       for (readCommitted <- isolations; from <- offsets;
-           maxBytes <- Seq(1L, 1043L, 64L * 1024, Long.MaxValue)) {
-        val end = if (readCommitted) os.lastStable else os.highWatermark
+           end = if (readCommitted) os.lastStable else os.highWatermark;
+           maxBytes <- Seq(0L, 1L, 1043L, 64L * 1024, Long.MaxValue) ++
+             boundaryBudgets(from, end)) {
         val want = fetchedRows(LogOps.fetchWithByteBudget(
           log.filter(!col("is_control") && col("offset") < end &&
             col("offset") >= math.max(from, os.logStart))
@@ -785,7 +800,40 @@ class StorageSpec extends SparkSpec {
     assertFetchIsFullLogAnswer(st, tp, "after maintain")
   }
 
-  test("a 64 KiB fetch over 24 batch objects is one Spark job over at most 3 objects") {
+  /** Overwrites every data file of a batch object with bytes that are
+    * not Parquet: a fetch that opens it throws.
+    */
+  private def corrupt(obj: java.nio.file.Path): Unit =
+    dirEntries(obj).foreach { f =>
+      val n = f.getFileName.toString
+      if (n.endsWith(".crc")) java.nio.file.Files.delete(f)
+      else if (!n.startsWith("_")) java.nio.file.Files.writeString(f, "not parquet")
+    }
+
+  /** Each 64 KiB fetch, run from the highest offset down, first corrupts
+    * every batch object past the last one its answer needs, then must
+    * still return the full-log answer: it never opens an object past
+    * its answer. `run` wraps each fetch-and-collect.
+    */
+  private def assertFetchOpensOnlyItsAnswer(
+      st: ParquetStorage, tp: Topition, froms: Seq[Long],
+      run: (() => Array[org.apache.spark.sql.Row]) => Array[org.apache.spark.sql.Row] =
+        f => f()): Unit = {
+    val objects = batchObjects(st, tp)
+    val bases = objects.map(_.getFileName.toString.stripSuffix(".parquet").toLong)
+    val log = spark.read.schema(logSchema).parquet(objects.map(_.toString): _*)
+      .filter(!col("is_control")).withColumn("val_len", LogOps.budgetBytes)
+    val wants = froms.map(from =>
+      fetchedRows(LogOps.fetchWithByteBudget(log, from, 64L * 1024)))
+    froms.zip(wants).sortBy(-_._1).foreach { case (from, want) =>
+      assert(want.nonEmpty)
+      objects.zip(bases).filter(_._2 > want.last._1).foreach(o => corrupt(o._1))
+      val rows = run(() => st.fetch(tp, from, 64L * 1024).collect())
+      assert(localRows(rows) === want, s"fetch($from)")
+    }
+  }
+
+  test("a 64 KiB fetch over 24 batch objects runs no job and opens none past its answer") {
     val (st, _) = newStorage()
     st.createTopic("t1", 1)
     (0 until 24).foreach(b => assert(st.produce(tp, kib(50, b * 50)).isRight))
@@ -798,19 +846,119 @@ class StorageSpec extends SparkSpec {
           jobs.incrementAndGet(); ()
         }
     }
-    Seq(0L, 625L).foreach { from =>
-      jobs.set(0)
-      spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(listener)
+    try assertFetchOpensOnlyItsAnswer(st, tp, Seq(0L, 625L), { fetch =>
       spark.sparkContext.setJobGroup(group, "pruned fetch")
-      val df = try {
-        val df = st.fetch(tp, from, 64L * 1024)
-        assert(df.collect().map(_.getAs[Long]("offset")).min === from)
-        df
-      } finally spark.sparkContext.clearJobGroup()
+      try fetch() finally spark.sparkContext.clearJobGroup()
+    }) finally {
       Thread.sleep(500) // let listener events drain
       spark.sparkContext.removeSparkListener(listener)
-      assert(jobs.get() === 1, s"fetch($from): ${jobs.get()} jobs")
-      assert(df.inputFiles.length <= 3, df.inputFiles.mkString(", "))
     }
+    assert(jobs.get() === 0, s"${jobs.get()} jobs")
+  }
+
+  test("fetch over produceAll output and maintain segments opens no object past its answer") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 1)
+    (0 until 24).foreach(b => assert(st.produceAll("t1",
+      kib(50, b * 50).withColumn("partition", lit(0))) === Right(Map(0 -> b * 50L))))
+    assertFetchOpensOnlyItsAnswer(st, tp, Seq(0L, 625L))
+
+    val (st2, _) = newStorage()
+    st2.createTopic("t1", 1, Map(ConfigKey.CleanupPolicy -> "compact",
+      ConfigKey.SegmentRows -> "50"))
+    (0 until 4).foreach(b => assert(st2.produce(tp, kib(300, b * 300)).isRight))
+    st2.maintain()
+    assert(batchObjects(st2, tp).length === 24)
+    assertFetchOpensOnlyItsAnswer(st2, tp, Seq(0L, 625L))
+  }
+
+  /** The offsets of a batch object, read one data file at a time in
+    * name order, each in its stored row order.
+    */
+  private def objectOffsets(obj: java.nio.file.Path): Seq[Long] =
+    dirEntries(obj).filterNot { f =>
+      val n = f.getFileName.toString
+      n.startsWith("_") || n.startsWith(".")
+    }.flatMap(f => spark.read.schema(logSchema).parquet(f.toString)
+      .select("offset").collect().map(_.getLong(0)).toSeq)
+
+  /** Rewrites the last batch object of `tp` with its rows in descending
+    * offset order.
+    */
+  private def writeDescendingObject(st: ParquetStorage, tp: Topition): Unit = {
+    val obj = batchObjects(st, tp).last
+    val rows = spark.read.schema(logSchema).parquet(obj.toString).collect()
+      .sortBy(-_.getAs[Long]("offset"))
+    val tmp = obj.resolveSibling(".descending")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), logSchema)
+      .coalesce(1).write.parquet(tmp.toString)
+    val old = java.nio.file.Files.walk(obj)
+    try old.sorted(java.util.Comparator.reverseOrder()).forEach(java.nio.file.Files.delete(_))
+    finally old.close()
+    java.nio.file.Files.move(tmp, obj)
+    val offsets = objectOffsets(obj)
+    assert(offsets.length > 1 && offsets === offsets.sorted.reverse)
+  }
+
+  test("every writer leaves each batch object's offsets ascending; a descending object makes fetch throw") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 3, Map(ConfigKey.CleanupPolicy -> "compact",
+      ConfigKey.SegmentRows -> "40"))
+    assert(st.produce(tp, kib(100, 0).repartition(6, col("key"))).isRight)
+    assert(st.produceAll("t1", kib(120, 100).repartition(8, col("key"))
+      .withColumn("partition", pmod(hash(col("key")), lit(3)))).isRight)
+    val (pid, _) = st.initProducer("tx-order")
+    st.txnBegin(pid, tp)
+    assert(st.produce(tp, kib(10, 300), producerId = pid, producerEpoch = 0,
+      baseSequence = 0).isRight)
+    assert(st.txnEnd(pid, commit = true) === ErrorCode.None) // marker object
+    def assertAscending(stage: String): Unit = (0 until 3).foreach { p =>
+      val objects = batchObjects(st, Topition("t1", p))
+      assert(objects.nonEmpty, s"$stage: partition $p")
+      objects.foreach { o =>
+        val offsets = objectOffsets(o)
+        assert(offsets.nonEmpty && offsets === offsets.distinct.sorted &&
+          offsets.head === o.getFileName.toString.stripSuffix(".parquet").toLong,
+          s"$stage: $o holds $offsets")
+      }
+    }
+    assertAscending("produce, produceAll, control marker")
+    st.maintain()
+    assert(batchObjects(st, tp).length > 3) // segments of 40 rows
+    assertAscending("maintain")
+
+    val (st2, _) = newStorage()
+    st2.createTopic("t1", 1)
+    (0 until 2).foreach(b => assert(st2.produce(tp, kib(10, b * 10)).isRight))
+    writeDescendingObject(st2, tp)
+    Seq(0L, 12L).foreach { from =>
+      val e = intercept[IllegalStateException](st2.fetch(tp, from, Long.MaxValue))
+      assert(e.getMessage.contains("offsets must ascend"), e.getMessage)
+    }
+  }
+
+  test("300 fetches that stop mid-object or throw leave the open descriptor count flat") {
+    def openFds(): Int =
+      Option(new java.io.File("/proc/self/fd").list()).map(_.length).getOrElse(-1)
+    assume(openFds() > 0, "needs /proc/self/fd")
+    val (st, _) = newStorage()
+    st.createTopic("t1", 2)
+    (0 until 4).foreach(b => assert(st.produce(tp, kib(50, b * 50)).isRight))
+    val bad = Topition("t1", 1)
+    (0 until 2).foreach(b => assert(st.produce(bad, kib(10, b * 10)).isRight))
+    writeDescendingObject(st, bad)
+    def round(i: Int): Unit = {
+      val from = (i * 37L) % 190
+      // about 4 records: every fetch stops inside its first object
+      val rows = st.fetch(tp, from, 4096).collect()
+      assert(rows.map(_.getAs[Long]("offset")).toSeq === (from until from + rows.length))
+      if (i % 3 == 0) intercept[IllegalStateException](st.fetch(bad, 0, Long.MaxValue))
+    }
+    (0 until 20).foreach(round) // warm-up: lazily opened jars, pools
+    val before = openFds()
+    (0 until 300).foreach(round)
+    val after = openFds()
+    assert(after - before <= 16, s"open descriptors $before -> $after")
   }
 }
