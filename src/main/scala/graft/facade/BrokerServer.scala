@@ -215,7 +215,7 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
           throw new UnsupportedOperationException(
             s"api ${header.apiKey} v${header.apiVersion} not served")
       }
-    val out = responseBuffer(responseCapacity(header, buf))
+    val out = responseBuffer()
     // flexible versions use response header v1 (correlation id + tagged
     // fields); ApiVersions is the protocol-mandated exception (always
     // header v0 so a confused client can still parse the downgrade), and
@@ -264,32 +264,28 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
             }
         }
       case 18 =>
-        // modern clients bootstrap with v3/v4 (flexible; v4 is
-        // wire-identical to v3). Above our max: UNSUPPORTED_VERSION
-        // with the v0 body listing what we serve, so the client can
-        // downgrade (the standard ApiVersions dance).
-        if (header.apiVersion > 4) writeApiVersionsResponse(out, error = 35)
-        else if (header.apiVersion >= 3) {
-          readApiVersionsV3(buf)
-          writeApiVersionsResponseV3(out)
-        } else writeApiVersionsResponse(out)
-      case 3 if header.apiVersion >= 9 =>
+        // modern clients bootstrap with v3/v4 (v4 is wire-identical to
+        // v3). Above our max: UNSUPPORTED_VERSION with the v0 body
+        // listing what we serve, so the client can downgrade (the
+        // standard ApiVersions dance).
+        val v = header.apiVersion.toInt
+        if (v > 4) writeApiVersionsResponse(out, error = 35)
+        else {
+          readApiVersions(buf, v)
+          writeApiVersionsResponse(out, version = v)
+        }
+      case 3 =>
         val v = header.apiVersion.toInt
         lazy val known = storage.topics
-        val (requested, allowAuto) = readMetadataV9Full(buf, v,
+        val (requested, allowAuto) = readMetadata(buf, v,
           resolveId = u => known.find(t => topicUuid(t) == u).orNull)
         // v10+ by-id entries naming no topic: echo the id with
         // UNKNOWN_TOPIC_ID; resolved/named entries flow as names
         val unknownIds = requested.toSeq.flatten
           .collect { case (null, id) if id != null => id }
         val names = requested.map(_.collect { case (n, _) if n != null => n })
-        writeMetadataResponseV9(out, host, boundPort,
-          metadataTopics(names, allowAuto), v, unknownIds)
-      case 3 =>
-        val (requested, allowAuto) =
-          readMetadataClassicFull(buf, header.apiVersion)
         writeMetadataResponse(out, host, boundPort,
-          metadataTopics(requested, allowAuto), header.apiVersion)
+          metadataTopics(names, allowAuto), v, unknownIds)
       case 0 =>
         handleProduce(buf, out, header.apiVersion)
       case 1 =>
@@ -861,34 +857,20 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
     used.flip()
     val a = new Array[Byte](used.remaining())
     used.get(a)
-    if (out.capacity == DefaultResponseCapacity) spareResponseBuffers.offer(out)
+    spareResponseBuffers.offer(out)
     a
   }
 
-  // Default-size response buffers are reused, a few spares kept: a fresh
-  // 4 MiB array per request is a humongous allocation per round trip, and
-  // at a few hundred requests a second its collections set the pace.
-  private final val DefaultResponseCapacity = 1 << 22
+  // 4 MiB response buffers are reused, a few spares kept: a fresh 4 MiB
+  // array per request is a humongous allocation per round trip, and at a
+  // few hundred requests a second its collections set the pace. A fetch
+  // whose records outgrow it writes into a buffer of its own size.
   private val spareResponseBuffers = new ArrayBlockingQueue[ByteBuffer](8)
 
-  private def responseBuffer(capacity: Int): ByteBuffer = {
-    val spare = if (capacity == DefaultResponseCapacity) spareResponseBuffers.poll() else null
-    if (spare == null) ByteBuffer.allocate(capacity) else spare.clear()
+  private def responseBuffer(): ByteBuffer = {
+    val spare = spareResponseBuffers.poll()
+    if (spare == null) ByteBuffer.allocate(1 << 22) else spare.clear()
   }
-
-  /** Fetch responses scale with the request's max_bytes — a fixed buffer
-    * caps every consumer at its size. Peek max_bytes at its fixed body
-    * offset (replica_id, max_wait, min_bytes precede it in every served
-    * version, classic and flexible alike — int fields are not compact)
-    * and size the buffer from it, with slack for headers and the
-    * min-one-record overshoot. Everything else fits the 4 MiB default.
-    */
-  private def responseCapacity(header: RequestHeader, buf: ByteBuffer): Int =
-    if (header.apiKey == 1 && buf.remaining() >= 16) {
-      val maxBytes = buf.getInt(buf.position() + 12)
-      val want = math.max(maxBytes.toLong, 0L) + (1 << 16)
-      math.max(DefaultResponseCapacity, math.min(want, 512L << 20)).toInt
-    } else DefaultResponseCapacity
 
   /** Coordinator state → the Kafka group-state string of the admin APIs. */
   private def groupKafkaState(g: String): String =
@@ -1131,8 +1113,7 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
 
   private def handleProduce(buf: ByteBuffer, out: ByteBuffer,
                             version: Int): Unit = {
-    val v9 = version >= 9
-    val req = if (v9) readProduceV9(buf) else readProduce(buf)
+    val req = readProduce(buf, version)
     val wireBytes = req.topics.iterator
       .flatMap(_.partitions.iterator.map(p =>
         Option(p.records).map(_.length.toLong).getOrElse(0L))).sum
@@ -1198,8 +1179,7 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
       }
       t.topic -> parts
     }
-    if (v9) writeProduceResponseV9(out, results, throttle)
-    else writeProduceResponse(out, results, throttle, version)
+    writeProduceResponse(out, results, throttle, version)
   }
 
   private def handleListOffsets(buf: ByteBuffer, out: ByteBuffer,
@@ -1326,7 +1306,7 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
   }
 
   /** One handler for every served Fetch version: classic v4-v11 and
-    * flexible v12-v16 differ only in codec, not semantics. The
+    * flexible v12-v17 differ only in codec, not semantics. The
     * per-partition result carries the aborted-transaction list that
     * read_committed consumers use to drop aborted records client-side
     * (J3 interval overlap on the wire) — real on every version that can
@@ -1337,13 +1317,10 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
     */
   private def handleFetch(buf: ByteBuffer, out: ByteBuffer,
                           version: Int): ByteBuffer = {
-    val rawReq =
-      if (version >= 12) {
-        // resolve v13+ topic ids against the CURRENT topic set
-        lazy val known = storage.topics
-        readFetchV12(buf, version,
-          resolveId = u => known.find(t => WireProtocol.topicUuid(t) == u).orNull)
-      } else readFetch(buf, version)
+    // resolve v13+ topic ids against the CURRENT topic set
+    lazy val known = storage.topics
+    val rawReq = readFetch(buf, version,
+      resolveId = u => known.find(t => WireProtocol.topicUuid(t) == u).orNull)
     // unresolved ids split out of the session/read flow entirely: their
     // partitions answer UNKNOWN_TOPIC_ID without touching storage
     val (unknownTopics, knownTopics) =
@@ -1468,12 +1445,9 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
     val b = if (bound <= out.remaining()) out else ByteBuffer.allocate(bound)
     val throttle = fetchThrottleMs(results.iterator.map(_._2.iterator
       .map(p => Option(p.records).map(_.length.toLong).getOrElse(0L)).sum).sum)
-    if (version >= 12) {
-      writeEmptyTaggedFields(b)
-      writeFetchResponseV12(b, results, error, sessionId, throttle,
-        version, unknownIdResults)
-    } else writeFetchResponseClassic(b, results, version, error, sessionId,
-      throttle)
+    if (isFlexible(1, version.toShort)) writeEmptyTaggedFields(b) // response header v1
+    writeFetchResponse(b, results, version, error, sessionId, throttle,
+      unknownIdResults)
     b
   }
 }

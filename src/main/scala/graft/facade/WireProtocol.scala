@@ -3,51 +3,23 @@ package graft.facade
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-/** Kafka wire-protocol codec for the 48 APIs the facade serves —
+/** Kafka wire-protocol codec for the APIs the facade serves —
   * hand-written counterpart of the reference's codegen'd ser/de
   * (`nisshi-sans-io/src/ser.rs`, `de.rs`, driven by the 185 protocol
-  * JSONs in `nisshi-sans-io/message/`). Every version ApiVersions
-  * advertises ([[SupportedApis]]) is actually encoded/decoded:
+  * JSONs in `nisshi-sans-io/message/`). [[SupportedApis]] lists the
+  * served version range of each API and every one of those versions is
+  * encoded/decoded; [[isFlexible]] says where each API switches to the
+  * flexible encoding. Each API has one reader and one writer per
+  * direction, gated on version, with `Codec` picking the classic or
+  * compact primitives.
   *
-  *  - Produce v3-v9 (api_key 0) — v3-v8 classic, v9 flexible; record
-  *    batches as magic-v2 bytes; log_start_offset (v5+) and
-  *    record_errors (v8+) response fields
-  *  - Fetch v4-v12 (1) — v4-v11 classic (session fields v7+, leader
-  *    epochs v9+, rack v11), v12 flexible; aborted-txn lists on all
-  *  - ListOffsets v0-v8 (2) — isolation (v2+), leader epochs (v4+),
-  *    flexible v6+, max-timestamp lookups (v7+, KIP-734)
-  *  - Metadata v1-v9 (3) — cluster_id (v2+), throttle (v3+), offline
-  *    replicas (v5+), leader epoch (v7+), authorized-ops (v8+), v9
-  *    flexible; per-topic error codes
-  *  - ApiVersions v0-v3 (18) — v3 flexible, >max downgrade dance
-  *  - OffsetCommit v0-v8 (8) and OffsetFetch v0-v7 (9) — flexible at
-  *    v8/v6+, null topic array = all group offsets
-  *  - FindCoordinator v0-v4 (10, batched keys v4), JoinGroup v0-v6 (11),
-  *    Heartbeat v0-v4 (12), LeaveGroup v0-v4 (13, batched v3+),
-  *    SyncGroup v0-v4 (14) — flexible endpoints, group_instance_id
-  *    fields parsed, with ConsumerProtocol Subscription/Assignment v0
-  *    payload codecs
-  *  - DescribeGroups v0-v5 (15), ListGroups v0-v4 (16, states filter
-  *    v4), SaslHandshake v0-v1 (17; v0 = legacy bare-token exchange),
-  *    CreateTopics v0-v7 (19), DeleteTopics v0-v6 (20, topic ids v6),
-  *    DeleteRecords v0-v2 (21), SaslAuthenticate v0-v2 (36),
-  *    DeleteGroups v0-v2 (42), OffsetDelete v0 (47)
-  *  - txn plane: InitProducerId v0-v4 (22), AddPartitionsToTxn v0-v3
-  *    (24), AddOffsetsToTxn v0-v3 (25), EndTxn v0-v3 (26),
-  *    TxnOffsetCommit v0-v3 (28)
-  *  - config/ACL admin: DescribeConfigs v0-v4 (32),
-  *    IncrementalAlterConfigs v0-v1 (44), DescribeAcls v0-v3 (29),
-  *    CreateAcls v0-v3 (30)
-  *  - cluster ops: ElectLeaders v0-v2 (43),
-  *    AlterPartitionReassignments v0 (45)
-  *  - introspection (flexible-only APIs): ListPartitionReassignments v0
-  *    (46), DescribeUserScramCredentials v0 (50),
-  *    AlterUserScramCredentials v0 (51), DescribeCluster v0-v1 (60),
-  *    ConsumerGroupDescribe v0 (69), GetTelemetrySubscriptions v0 (71),
-  *    DescribeTopicPartitions v0 (75)
-  *
-  * Frames are INT32 length-prefixed; request header v1 classic, v2
-  * (tagged fields) for flexible versions — see [[isFlexible]].
+  * Layout notes the codec bodies do not show:
+  *  - frames are INT32 length-prefixed; request header v1 classic, v2
+  *    (tagged fields) for flexible versions, and the ApiVersions
+  *    response always uses header v0;
+  *  - record batches travel as opaque magic-v2 bytes (`RecordBatchCodec`);
+  *  - topic ids (Fetch v13+, Metadata v10+, DeleteTopics v6) are the
+  *    name-derived uuids of [[topicUuid]].
   */
 object WireProtocol {
 
@@ -242,34 +214,46 @@ object WireProtocol {
   final case class ProduceTopic(topic: String, partitions: Seq[ProducePartition])
   final case class ProduceRequest(acks: Short, timeoutMs: Int, topics: Seq[ProduceTopic])
 
-  /** Produce v3: transactional_id acks timeout [topic [partition records]] */
-  def readProduce(buf: ByteBuffer): ProduceRequest = {
-    readString(buf) // transactional_id (ignored in this slice)
+  /** Produce v3-v11 (ProduceRequest.json): transactional_id acks
+    * timeout [topic [partition records]]; the layout is constant, only
+    * the encoding turns flexible at v9.
+    */
+  def readProduce(buf: ByteBuffer, version: Int = 3): ProduceRequest = {
+    val c = new Codec(version >= 9)
+    c.str(buf) // transactional_id (ignored in this slice)
     val acks = buf.getShort
     val timeout = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val t = readString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        ProducePartition(buf.getInt, readBytes(buf))
+    val topics = (0 until c.len(buf)).map { _ =>
+      val t = c.str(buf)
+      val parts = (0 until c.len(buf)).map { _ =>
+        val p = ProducePartition(buf.getInt, c.bytes(buf))
+        c.tags(buf)
+        p
       }
+      c.tags(buf)
       ProduceTopic(t, parts)
     }
+    c.tags(buf)
     ProduceRequest(acks, timeout, topics)
   }
 
-  def writeProduce(buf: ByteBuffer, r: ProduceRequest): Unit = {
-    writeString(buf, null)
+  def writeProduce(buf: ByteBuffer, r: ProduceRequest, version: Int = 3): Unit = {
+    val c = new Codec(version >= 9)
+    c.putStr(buf, null)
     buf.putShort(r.acks)
     buf.putInt(r.timeoutMs)
-    buf.putInt(r.topics.size)
+    c.putLen(buf, r.topics.size)
     r.topics.foreach { t =>
-      writeString(buf, t.topic)
-      buf.putInt(t.partitions.size)
+      c.putStr(buf, t.topic)
+      c.putLen(buf, t.partitions.size)
       t.partitions.foreach { p =>
         buf.putInt(p.partition)
-        writeBytes(buf, p.records)
+        c.putBytes(buf, p.records)
+        c.putTags(buf)
       }
+      c.putTags(buf)
     }
+    c.putTags(buf)
   }
 
   final case class FetchPartition(partition: Int, fetchOffset: Long, maxBytes: Int)
@@ -289,68 +273,97 @@ object WireProtocol {
                                 sessionId: Int = 0, sessionEpoch: Int = -1,
                                 forgotten: Seq[(String, Seq[Int])] = Nil)
 
-  /** Classic Fetch request, v4-v11 (FetchRequest.json layout): replica_id
-    * max_wait min_bytes max_bytes isolation session(v7+) [topic
-    * [partition current_leader_epoch(v9+) fetch_offset log_start(v5+)
-    * partition_max_bytes]] forgotten(v7+) rack_id(v11).
+  /** Fetch v4-v17 (FetchRequest.json): replica_id (v4-v14) max_wait
+    * min_bytes max_bytes isolation session(v7+) [topic [partition
+    * current_leader_epoch(v9+) fetch_offset last_fetched_epoch(v12+)
+    * log_start(v5+) partition_max_bytes]] forgotten(v7+) rack_id(v11+).
+    * v13+ addresses topics by uuid (KIP-516): `resolveId` maps ids back
+    * to names (null = unknown id, answered UNKNOWN_TOPIC_ID). v15+ moves
+    * replica_id into the tagged ReplicaState field (KIP-903), which the
+    * trailing tagged-field skip consumes.
     */
-  def readFetch(buf: ByteBuffer, version: Int = 4): FetchRequest = {
-    buf.getInt // replica_id
+  def readFetch(buf: ByteBuffer, version: Int = 4,
+                resolveId: java.util.UUID => String = null): FetchRequest = {
+    val c = new Codec(version >= 12)
+    if (version <= 14) buf.getInt // replica_id
     val maxWait = buf.getInt
     val minBytes = buf.getInt
     val maxBytes = buf.getInt
     val isolation = buf.get()
     val (sid, sep) =
       if (version >= 7) (buf.getInt, buf.getInt) else (0, -1)
-    val topics = (0 until buf.getInt).map { _ =>
-      val t = readString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
+    def topicKey(): (String, java.util.UUID) =
+      if (version >= 13) {
+        val u = getUuid(buf)
+        (if (resolveId ne null) resolveId(u) else null, u)
+      } else (c.str(buf), null)
+    val topics = (0 until c.len(buf)).map { _ =>
+      val (t, id) = topicKey()
+      val parts = (0 until c.len(buf)).map { _ =>
         val p = buf.getInt
         if (version >= 9) buf.getInt // current_leader_epoch
         val off = buf.getLong
+        if (version >= 12) buf.getInt // last_fetched_epoch
         if (version >= 5) buf.getLong // log_start_offset (follower-only)
-        FetchPartition(p, off, buf.getInt)
+        val pmax = buf.getInt
+        c.tags(buf)
+        FetchPartition(p, off, pmax)
       }
-      FetchTopic(t, parts)
+      c.tags(buf)
+      FetchTopic(t, parts, id)
     }
     val forgotten =
       if (version >= 7)
-        (0 until buf.getInt).map { _ =>
-          readString(buf) -> (0 until buf.getInt).map(_ => buf.getInt).toSeq
+        (0 until c.len(buf)).map { _ =>
+          val (t, _) = topicKey()
+          val ps = (0 until c.len(buf)).map(_ => buf.getInt).toSeq
+          c.tags(buf)
+          t -> ps
         }
       else Seq.empty
-    if (version >= 11) readString(buf) // rack_id
+    if (version >= 11) c.str(buf) // rack_id
+    c.tags(buf)
     FetchRequest(maxWait, minBytes, maxBytes, isolation, topics,
       sid, sep, forgotten)
   }
 
   def writeFetch(buf: ByteBuffer, r: FetchRequest, version: Int = 4): Unit = {
-    buf.putInt(-1)
+    val c = new Codec(version >= 12)
+    if (version <= 14) buf.putInt(-1)
     buf.putInt(r.maxWaitMs)
     buf.putInt(r.minBytes)
     buf.putInt(r.maxBytes)
     buf.put(r.isolation)
     if (version >= 7) { buf.putInt(r.sessionId); buf.putInt(r.sessionEpoch) }
-    buf.putInt(r.topics.size)
+    def putTopicKey(name: String, id: java.util.UUID): Unit =
+      if (version >= 13)
+        putUuid(buf, if (id != null) id else topicUuid(name))
+      else c.putStr(buf, name)
+    c.putLen(buf, r.topics.size)
     r.topics.foreach { t =>
-      writeString(buf, t.topic)
-      buf.putInt(t.partitions.size)
+      putTopicKey(t.topic, t.topicId)
+      c.putLen(buf, t.partitions.size)
       t.partitions.foreach { p =>
         buf.putInt(p.partition)
         if (version >= 9) buf.putInt(-1) // current_leader_epoch
         buf.putLong(p.fetchOffset)
+        if (version >= 12) buf.putInt(-1) // last_fetched_epoch
         if (version >= 5) buf.putLong(-1L) // log_start_offset
         buf.putInt(p.maxBytes)
+        c.putTags(buf)
       }
+      c.putTags(buf)
     }
     if (version >= 7) {
-      buf.putInt(r.forgotten.size)
+      c.putLen(buf, r.forgotten.size)
       r.forgotten.foreach { case (t, ps) =>
-        writeString(buf, t)
-        buf.putInt(ps.size); ps.foreach(buf.putInt)
+        putTopicKey(t, null)
+        c.putLen(buf, ps.size); ps.foreach(buf.putInt)
+        c.putTags(buf)
       }
     }
-    if (version >= 11) writeString(buf, "") // rack_id
+    if (version >= 11) c.putStr(buf, "") // rack_id
+    c.putTags(buf)
   }
 
   // ------------------------------------------------------------- responses
@@ -2211,177 +2224,215 @@ object WireProtocol {
     r
   }
 
-  /** ApiVersions v0 response: error [api_key min max] */
-  def writeApiVersionsResponse(buf: ByteBuffer, error: Short = 0): Unit = {
-    buf.putShort(error)
-    buf.putInt(SupportedApis.size)
-    SupportedApis.foreach { case (k, lo, hi) =>
-      buf.putShort(k.toShort)
-      buf.putShort(lo.toShort)
-      buf.putShort(hi.toShort)
-    }
-  }
-
-  /** ApiVersions v3 request body: client software name/version (compact
-    * strings) + tagged fields — identification only, read and skipped.
+  /** ApiVersions v0-v4 request: empty before v3; v3+ carries the client
+    * software name and version (compact strings) + tagged fields —
+    * identification only, read and skipped.
     */
-  def readApiVersionsV3(buf: ByteBuffer): Unit =
-    if (buf.hasRemaining) {
+  def readApiVersions(buf: ByteBuffer, version: Int = 0): Unit =
+    if (version >= 3 && buf.hasRemaining) {
       readCompactString(buf)
       readCompactString(buf)
       skipTaggedFields(buf)
     }
 
-  def writeApiVersionsV3(buf: ByteBuffer, name: String, version: String): Unit = {
-    writeCompactString(buf, name)
-    writeCompactString(buf, version)
-    writeEmptyTaggedFields(buf)
-  }
-
-  /** ApiVersions v3 response (flexible): error, compact api array with
-    * per-entry tagged fields, throttle, tagged fields. NOTE the protocol
-    * quirk: the ApiVersions RESPONSE always uses header v0 (no header
-    * tagged fields) so that clients can parse the error path before
-    * versions are negotiated.
-    */
-  def writeApiVersionsResponseV3(buf: ByteBuffer): Unit = {
-    buf.putShort(0)
-    writeCompactArrayLen(buf, SupportedApis.size)
-    SupportedApis.foreach { case (k, lo, hi) =>
-      buf.putShort(k.toShort)
-      buf.putShort(lo.toShort)
-      buf.putShort(hi.toShort)
+  def writeApiVersions(buf: ByteBuffer, name: String, softwareVersion: String,
+                       version: Int = 0): Unit =
+    if (version >= 3) {
+      writeCompactString(buf, name)
+      writeCompactString(buf, softwareVersion)
       writeEmptyTaggedFields(buf)
     }
-    buf.putInt(0) // throttle_time_ms
-    writeEmptyTaggedFields(buf)
+
+  /** ApiVersions response: error [api_key min max] throttle_time_ms
+    * (v1+), flexible v3+. NOTE the protocol quirk: the ApiVersions
+    * RESPONSE always uses header v0 (no header tagged fields) so that
+    * clients can parse the error path before versions are negotiated.
+    */
+  def writeApiVersionsResponse(buf: ByteBuffer, error: Short = 0,
+                               version: Int = 0): Unit = {
+    val c = new Codec(version >= 3)
+    buf.putShort(error)
+    c.putLen(buf, SupportedApis.size)
+    SupportedApis.foreach { case (k, lo, hi) =>
+      buf.putShort(k.toShort)
+      buf.putShort(lo.toShort)
+      buf.putShort(hi.toShort)
+      c.putTags(buf)
+    }
+    if (version >= 1) buf.putInt(0) // throttle_time_ms
+    c.putTags(buf)
   }
 
-  def readApiVersionsResponseV3(buf: ByteBuffer): Seq[(Int, Int, Int)] = {
+  def readApiVersionsResponse(buf: ByteBuffer, version: Int = 0): Seq[(Int, Int, Int)] = {
+    val c = new Codec(version >= 3)
     val err = buf.getShort
     require(err == 0, s"ApiVersions error $err")
-    val apis = (0 until readCompactArrayLen(buf)).map { _ =>
+    val apis = (0 until c.len(buf)).map { _ =>
       val t = (buf.getShort.toInt, buf.getShort.toInt, buf.getShort.toInt)
-      skipTaggedFields(buf)
+      c.tags(buf)
       t
     }
-    buf.getInt // throttle
-    skipTaggedFields(buf)
+    if (version >= 1) buf.getInt // throttle
+    c.tags(buf)
     apis
   }
 
-  /** Metadata v9 request: compact topic array (null = all), three bools
-    * (auto-create, cluster/topic authorized-operations), tagged fields.
-    * Returns the requested topic names, None = all.
+  /** Metadata v1-v12 request (MetadataRequest.json): [topic] (null array
+    * = all), allow_auto_topic_creation (v4+; earlier versions implicitly
+    * allow it, KIP-4), include_cluster_authorized_operations (v8-v10),
+    * include_topic_authorized_operations (v8+); flexible v9+. v10+ topics
+    * carry (TopicId, Name) with the name NULLABLE — by-id addressing,
+    * resolved through the name-derived uuid scheme (an unresolved id
+    * surfaces as (null, id) for the caller's UNKNOWN_TOPIC_ID row).
+    * Returns (requested topics, None = all; allow_auto_topic_creation).
     */
-  def readMetadataV9(buf: ByteBuffer): Option[Seq[String]] =
-    readMetadataV9Full(buf)._1.map(_.map(_._1))
-
-  /** Metadata v9-v12 flexible request. Version gates
-    * (MetadataRequest.json): v10+ topics carry (TopicId, Name) with the
-    * name NULLABLE — by-id addressing, resolved through the
-    * name-derived uuid scheme (an unresolved id surfaces as (null, id)
-    * for the caller's UNKNOWN_TOPIC_ID row); v11+ drops the
-    * include_cluster_authorized_operations flag.
-    */
-  def readMetadataV9Full(buf: ByteBuffer, version: Int = 9,
-                         resolveId: java.util.UUID => String = null)
+  def readMetadata(buf: ByteBuffer, version: Int = 1,
+                   resolveId: java.util.UUID => String = null)
       : (Option[Seq[(String, java.util.UUID)]], Boolean) = {
-    val n = readCompactArrayLen(buf)
+    val c = new Codec(version >= 9)
+    val n = c.len(buf)
     val topics =
       if (n < 0) None
       else Some((0 until n).map { _ =>
         val id = if (version >= 10) getUuid(buf) else null
-        val named = readCompactString(buf)
+        val named = c.str(buf)
         val t =
           if (named != null || id == null) named
           else if (resolveId ne null) resolveId(id)
           else null
-        skipTaggedFields(buf)
+        c.tags(buf)
         (t, id)
       })
-    val allowAuto = buf.get() != 0 // allow_auto_topic_creation
-    if (version <= 10) buf.get() // include_cluster_authorized_operations
-    buf.get() // include_topic_authorized_operations
-    skipTaggedFields(buf)
+    val allowAuto = if (version >= 4) buf.get() != 0 else true
+    if (version >= 8 && version <= 10) buf.get() // include_cluster_authorized_operations
+    if (version >= 8) buf.get() // include_topic_authorized_operations
+    c.tags(buf)
     (topics, allowAuto)
   }
 
-  def writeMetadataV9(buf: ByteBuffer, topics: Option[Seq[String]],
-                      allowAutoCreate: Boolean = false,
-                      version: Int = 9): Unit = {
+  def writeMetadata(buf: ByteBuffer, topics: Option[Seq[String]],
+                    allowAutoCreate: Boolean = true, version: Int = 1): Unit = {
+    val c = new Codec(version >= 9)
     topics match {
-      case None => writeUnsignedVarint(0, buf)
+      case None => c.putLen(buf, -1)
       case Some(ts) =>
-        writeCompactArrayLen(buf, ts.size)
+        c.putLen(buf, ts.size)
         ts.foreach { t =>
           if (version >= 10) putUuid(buf, new java.util.UUID(0L, 0L))
-          writeCompactString(buf, t)
-          writeEmptyTaggedFields(buf)
+          c.putStr(buf, t)
+          c.putTags(buf)
         }
     }
-    buf.put(if (allowAutoCreate) 1: Byte else 0: Byte)
-    if (version <= 10) buf.put(0: Byte)
-    buf.put(0: Byte)
-    writeEmptyTaggedFields(buf)
+    if (version >= 4) buf.put(if (allowAutoCreate) 1: Byte else 0: Byte)
+    if (version >= 8 && version <= 10) buf.put(0: Byte)
+    if (version >= 8) buf.put(0: Byte)
+    c.putTags(buf)
   }
 
-  /** Metadata v9-v12 response (flexible): throttle, compact broker
-    * array, cluster_id, controller, compact topic array with leader
-    * epochs and authorized-operations, tagged fields throughout. v10+
-    * topics carry their name-derived uuid; v11+ drops
-    * cluster_authorized_operations; `unknownIds` rows (v10+ by-id
-    * requests naming no topic) echo the id with a null name and
-    * UNKNOWN_TOPIC_ID.
+  /** Metadata response v1-v12 (MetadataResponse.json): throttle(v3+)
+    * [broker] cluster_id(v2+) controller_id [topic: error name
+    * topic_id(v10+) is_internal [partition: error idx leader
+    * leader_epoch(v7+) replicas isr offline(v5+)]
+    * topic_authorized_operations(v8+)] cluster_authorized_operations
+    * (v8-v10); flexible v9+. Topics carry a per-topic error (3 =
+    * UNKNOWN_TOPIC_OR_PARTITION for explicitly requested absentees);
+    * `unknownIds` rows (v10+ by-id requests naming no topic) echo the id
+    * with a null name and UNKNOWN_TOPIC_ID.
     */
-  def writeMetadataResponseV9(buf: ByteBuffer, host: String, port: Int,
-                              topics: Seq[(String, Int, Short)],
-                              version: Int = 9,
-                              unknownIds: Seq[java.util.UUID] = Nil): Unit = {
-    buf.putInt(0) // throttle
-    writeCompactArrayLen(buf, 1)
+  def writeMetadataResponse(buf: ByteBuffer, host: String, port: Int,
+                            topics: Seq[(String, Int, Short)],
+                            version: Int = 1,
+                            unknownIds: Seq[java.util.UUID] = Nil): Unit = {
+    val c = new Codec(version >= 9)
+    if (version >= 3) buf.putInt(0) // throttle
+    c.putLen(buf, 1) // one broker
     buf.putInt(0) // node_id
-    writeCompactString(buf, host)
+    c.putStr(buf, host)
     buf.putInt(port)
-    writeCompactString(buf, null) // rack
-    writeEmptyTaggedFields(buf)
-    writeCompactString(buf, "graft") // cluster_id
+    c.putStr(buf, null) // rack
+    c.putTags(buf)
+    if (version >= 2) c.putStr(buf, "graft") // cluster_id
     buf.putInt(0) // controller_id
     val unk = if (version >= 10) unknownIds else Nil
-    writeCompactArrayLen(buf, topics.size + unk.size)
+    c.putLen(buf, topics.size + unk.size)
     topics.foreach { case (t, nParts, err) =>
       buf.putShort(err)
-      writeCompactString(buf, t)
+      c.putStr(buf, t)
       if (version >= 10) putUuid(buf, topicUuid(t))
       buf.put(0: Byte) // is_internal
-      writeCompactArrayLen(buf, nParts)
+      c.putLen(buf, nParts)
       (0 until nParts).foreach { p =>
         buf.putShort(0) // error
-        buf.putInt(p)
-        buf.putInt(0) // leader
-        buf.putInt(0) // leader_epoch
-        writeCompactArrayLen(buf, 1); buf.putInt(0) // replicas
-        writeCompactArrayLen(buf, 1); buf.putInt(0) // isr
-        writeCompactArrayLen(buf, 0)                // offline replicas
-        writeEmptyTaggedFields(buf)
+        buf.putInt(p)   // partition
+        buf.putInt(0)   // leader
+        if (version >= 7) buf.putInt(0) // leader_epoch
+        c.putLen(buf, 1); buf.putInt(0) // replicas
+        c.putLen(buf, 1); buf.putInt(0) // isr
+        if (version >= 5) c.putLen(buf, 0) // offline_replicas
+        c.putTags(buf)
       }
-      buf.putInt(Int.MinValue) // topic_authorized_operations: null
-      writeEmptyTaggedFields(buf)
+      if (version >= 8) buf.putInt(Int.MinValue) // topic_authorized_operations: null
+      c.putTags(buf)
     }
     unk.foreach { id =>
       buf.putShort(100) // UNKNOWN_TOPIC_ID
       // MetadataResponse.Name is nullable only at v12+ (nullableVersions
       // 12+): a strict v10/v11 decoder rejects a null compact string, so
       // emit "" there and null only where the schema allows it
-      writeCompactString(buf, if (version >= 12) null else "")
+      c.putStr(buf, if (version >= 12) null else "")
       putUuid(buf, id)
       buf.put(0: Byte) // is_internal
-      writeCompactArrayLen(buf, 0)
+      c.putLen(buf, 0)
       buf.putInt(Int.MinValue)
-      writeEmptyTaggedFields(buf)
+      c.putTags(buf)
     }
-    if (version <= 10) buf.putInt(Int.MinValue) // cluster_authorized_operations
-    writeEmptyTaggedFields(buf)
+    if (version >= 8 && version <= 10)
+      buf.putInt(Int.MinValue) // cluster_authorized_operations
+    c.putTags(buf)
+  }
+
+  final case class MetadataTopic(name: String, partitions: Seq[Int],
+                                 error: Short = 0,
+                                 topicId: java.util.UUID = null)
+
+  def readMetadataResponse(buf: ByteBuffer, version: Int = 1)
+      : (String, Int, Seq[MetadataTopic]) = {
+    val c = new Codec(version >= 9)
+    if (version >= 3) buf.getInt // throttle
+    var host: String = null
+    var port = 0
+    (0 until c.len(buf)).foreach { _ =>
+      buf.getInt // node_id
+      host = c.str(buf)
+      port = buf.getInt
+      c.str(buf) // rack
+      c.tags(buf)
+    }
+    if (version >= 2) c.str(buf) // cluster_id
+    buf.getInt // controller
+    val topics = (0 until c.len(buf)).map { _ =>
+      val err = buf.getShort
+      val name = c.str(buf)
+      val id = if (version >= 10) getUuid(buf) else null
+      buf.get() // is_internal
+      val parts = (0 until c.len(buf)).map { _ =>
+        buf.getShort
+        val p = buf.getInt
+        buf.getInt // leader
+        if (version >= 7) buf.getInt // leader_epoch
+        (0 until c.len(buf)).foreach(_ => buf.getInt) // replicas
+        (0 until c.len(buf)).foreach(_ => buf.getInt) // isr
+        if (version >= 5) (0 until c.len(buf)).foreach(_ => buf.getInt)
+        c.tags(buf)
+        p
+      }
+      if (version >= 8) buf.getInt // topic_authorized_operations
+      c.tags(buf)
+      MetadataTopic(name, parts, err, id)
+    }
+    if (version >= 8 && version <= 10) buf.getInt // cluster_authorized_operations
+    c.tags(buf)
+    (host, port, topics)
   }
 
   /** Compact (nullable) bytes: uvarint of length+1, 0 = null. */
@@ -2403,181 +2454,66 @@ object WireProtocol {
       ()
     }
 
-  /** Produce v9 (flexible) request: txn_id, acks, timeout, compact topic
-    * array of compact partition arrays with compact-bytes record sets.
+  /** Produce response v3-v11 (ProduceResponse.json): [topic [partition
+    * error base_offset log_append_time log_start_offset(v5+)
+    * record_errors(v8+) error_message(v8+)]] throttle; flexible v9+. The
+    * 4-tuple's last element is the partition's log-start offset.
+    * throttleMs > 0 tells the client to back off — the client-quota
+    * mechanism (T10 rate limiting).
     */
-  def readProduceV9(buf: ByteBuffer): ProduceRequest = {
-    readCompactString(buf) // transactional_id
-    val acks = buf.getShort
-    val timeout = buf.getInt
-    val topics = (0 until readCompactArrayLen(buf)).map { _ =>
-      val t = readCompactString(buf)
-      val parts = (0 until readCompactArrayLen(buf)).map { _ =>
-        val p = buf.getInt
-        val records = readCompactBytes(buf)
-        skipTaggedFields(buf)
-        ProducePartition(p, records)
-      }
-      skipTaggedFields(buf)
-      ProduceTopic(t, parts)
-    }
-    skipTaggedFields(buf)
-    ProduceRequest(acks, timeout, topics)
-  }
-
-  def writeProduceV9(buf: ByteBuffer, r: ProduceRequest): Unit = {
-    writeCompactString(buf, null)
-    buf.putShort(r.acks)
-    buf.putInt(r.timeoutMs)
-    writeCompactArrayLen(buf, r.topics.size)
-    r.topics.foreach { t =>
-      writeCompactString(buf, t.topic)
-      writeCompactArrayLen(buf, t.partitions.size)
-      t.partitions.foreach { p =>
-        buf.putInt(p.partition)
-        writeCompactBytes(buf, p.records)
-        writeEmptyTaggedFields(buf)
-      }
-      writeEmptyTaggedFields(buf)
-    }
-    writeEmptyTaggedFields(buf)
-  }
-
-  /** Produce v9 response: per-partition error/base_offset plus
-    * log_append_time, log_start_offset, record_errors, error_message.
-    */
-  def writeProduceResponseV9(buf: ByteBuffer,
-                             results: Seq[(String, Seq[(Int, Short, Long, Long)])],
-                             throttleMs: Int = 0): Unit = {
-    writeCompactArrayLen(buf, results.size)
+  def writeProduceResponse(buf: ByteBuffer,
+                           results: Seq[(String, Seq[(Int, Short, Long, Long)])],
+                           throttleMs: Int = 0, version: Int = 3): Unit = {
+    val c = new Codec(version >= 9)
+    c.putLen(buf, results.size)
     results.foreach { case (topic, parts) =>
-      writeCompactString(buf, topic)
-      writeCompactArrayLen(buf, parts.size)
+      c.putStr(buf, topic)
+      c.putLen(buf, parts.size)
       parts.foreach { case (p, err, baseOffset, logStart) =>
         buf.putInt(p)
         buf.putShort(err)
         buf.putLong(baseOffset)
         buf.putLong(-1L) // log_append_time
-        buf.putLong(logStart)
-        writeCompactArrayLen(buf, 0) // record_errors
-        writeCompactString(buf, null) // error_message
-        writeEmptyTaggedFields(buf)
+        if (version >= 5) buf.putLong(logStart)
+        if (version >= 8) {
+          c.putLen(buf, 0) // record_errors: none (whole batch accepted/rejected)
+          c.putStr(buf, null) // error_message
+        }
+        c.putTags(buf)
       }
-      writeEmptyTaggedFields(buf)
+      c.putTags(buf)
     }
     buf.putInt(throttleMs)
-    writeEmptyTaggedFields(buf)
+    c.putTags(buf)
   }
 
-  def readProduceResponseV9(buf: ByteBuffer): (Seq[(String, Seq[(Int, Short, Long)])], Int) = {
-    val topics = (0 until readCompactArrayLen(buf)).map { _ =>
-      val t = readCompactString(buf)
-      val parts = (0 until readCompactArrayLen(buf)).map { _ =>
+  /** Reads a Produce response incl. the trailing throttle. */
+  def readProduceResponse(buf: ByteBuffer,
+                          version: Int = 3): (Seq[(String, Seq[(Int, Short, Long)])], Int) = {
+    val c = new Codec(version >= 9)
+    val topics = (0 until c.len(buf)).map { _ =>
+      val t = c.str(buf)
+      val parts = (0 until c.len(buf)).map { _ =>
         val p = buf.getInt
         val err = buf.getShort
         val off = buf.getLong
         buf.getLong // log_append_time
-        buf.getLong // log_start_offset
-        (0 until readCompactArrayLen(buf)).foreach { _ =>
-          buf.getInt; readCompactString(buf); skipTaggedFields(buf)
+        if (version >= 5) buf.getLong // log_start_offset
+        if (version >= 8) {
+          (0 until c.len(buf)).foreach { _ =>
+            buf.getInt; c.str(buf); c.tags(buf)
+          }
+          c.str(buf) // error_message
         }
-        readCompactString(buf) // error_message
-        skipTaggedFields(buf)
+        c.tags(buf)
         (p, err, off)
       }
-      skipTaggedFields(buf)
+      c.tags(buf)
       t -> parts
     }
     val throttle = buf.getInt
-    skipTaggedFields(buf)
+    c.tags(buf)
     (topics, throttle)
-  }
-
-  /** Fetch v12-v16 (flexible) request — session fields drive the
-    * incremental fetch-session machinery in the broker. Version gates
-    * (FetchRequest.json): v13+ addresses topics by UUID (KIP-516) — the
-    * caller supplies `resolveId` to map ids back to names (null result =
-    * unknown id, answered UNKNOWN_TOPIC_ID); v15+ drops the top-level
-    * replica_id (moved to the tagged ReplicaState field, KIP-903, which
-    * the trailing tagged-field skip consumes).
-    */
-  def readFetchV12(buf: ByteBuffer, version: Int = 12,
-                   resolveId: java.util.UUID => String = null): FetchRequest = {
-    if (version <= 14) buf.getInt // replica_id
-    val maxWait = buf.getInt
-    val minBytes = buf.getInt
-    val maxBytes = buf.getInt
-    val isolation = buf.get()
-    val sid = buf.getInt
-    val sep = buf.getInt
-    def topicKey(): (String, java.util.UUID) =
-      if (version >= 13) {
-        val u = getUuid(buf)
-        (if (resolveId ne null) resolveId(u) else null, u)
-      } else (readCompactString(buf), null)
-    val topics = (0 until readCompactArrayLen(buf)).map { _ =>
-      val (t, id) = topicKey()
-      val parts = (0 until readCompactArrayLen(buf)).map { _ =>
-        val p = buf.getInt
-        buf.getInt // current_leader_epoch
-        val off = buf.getLong
-        buf.getInt // last_fetched_epoch
-        buf.getLong // log_start_offset
-        val pmax = buf.getInt
-        skipTaggedFields(buf)
-        FetchPartition(p, off, pmax)
-      }
-      skipTaggedFields(buf)
-      FetchTopic(t, parts, id)
-    }
-    val forgotten = (0 until readCompactArrayLen(buf)).map { _ =>
-      val (t, _) = topicKey()
-      val ps = (0 until readCompactArrayLen(buf)).map(_ => buf.getInt).toSeq
-      skipTaggedFields(buf)
-      t -> ps
-    }
-    readCompactString(buf) // rack_id
-    skipTaggedFields(buf)
-    FetchRequest(maxWait, minBytes, maxBytes, isolation, topics,
-      sid, sep, forgotten)
-  }
-
-  def writeFetchV12(buf: ByteBuffer, r: FetchRequest,
-                    version: Int = 12): Unit = {
-    if (version <= 14) buf.putInt(-1)
-    buf.putInt(r.maxWaitMs)
-    buf.putInt(r.minBytes)
-    buf.putInt(r.maxBytes)
-    buf.put(r.isolation)
-    buf.putInt(r.sessionId)
-    buf.putInt(r.sessionEpoch)
-    def putTopicKey(name: String, id: java.util.UUID): Unit =
-      if (version >= 13)
-        putUuid(buf, if (id != null) id else topicUuid(name))
-      else writeCompactString(buf, name)
-    writeCompactArrayLen(buf, r.topics.size)
-    r.topics.foreach { t =>
-      putTopicKey(t.topic, t.topicId)
-      writeCompactArrayLen(buf, t.partitions.size)
-      t.partitions.foreach { p =>
-        buf.putInt(p.partition)
-        buf.putInt(-1)
-        buf.putLong(p.fetchOffset)
-        buf.putInt(-1)
-        buf.putLong(-1L)
-        buf.putInt(p.maxBytes)
-        writeEmptyTaggedFields(buf)
-      }
-      writeEmptyTaggedFields(buf)
-    }
-    writeCompactArrayLen(buf, r.forgotten.size)
-    r.forgotten.foreach { case (t, ps) =>
-      putTopicKey(t, null)
-      writeCompactArrayLen(buf, ps.size); ps.foreach(buf.putInt)
-      writeEmptyTaggedFields(buf)
-    }
-    writeCompactString(buf, "")  // rack
-    writeEmptyTaggedFields(buf)
   }
 
   final case class FetchV12PartResult(partition: Int, error: Short,
@@ -2586,357 +2522,115 @@ object WireProtocol {
                                       aborted: Seq[(Long, Long)],
                                       records: Array[Byte])
 
-  /** Fetch v12-v16 response — includes the aborted-transaction list
-    * that read_committed consumers use to drop aborted records
-    * client-side. For v13+ topics are keyed by UUID: named entries emit
-    * their name-derived uuid; `unknownIds` entries (unresolved request
-    * ids, each echoed verbatim with UNKNOWN_TOPIC_ID partitions) ride
-    * only on v13+ and are dropped from a ≤v12 response, which has no id
-    * to echo. v16's NodeEndpoints is a tagged optional this
-    * single-broker facade rightly omits.
+  /** Fetch response v4-v17 (FetchResponse.json): throttle
+    * error+session(v7+) [topic [partition error hw lso log_start(v5+)
+    * [aborted: pid first_offset] preferred_read_replica(v11+) records]];
+    * flexible v12+. The aborted-transaction list is what read_committed
+    * consumers use to drop aborted records client-side. v13+ keys topics
+    * by uuid: named entries emit their name-derived uuid; `unknownIds`
+    * entries (unresolved request ids, each echoed verbatim with
+    * UNKNOWN_TOPIC_ID partitions) ride only on v13+ and are dropped from
+    * earlier versions, which have no id to echo. v16's NodeEndpoints is a
+    * tagged optional this single-broker facade rightly omits.
     */
-  def writeFetchResponseV12(buf: ByteBuffer,
-                            results: Seq[(String, Seq[FetchV12PartResult])],
-                            error: Short = 0, sessionId: Int = 0,
-                            throttleMs: Int = 0, version: Int = 12,
-                            unknownIds: Seq[(java.util.UUID, Seq[FetchV12PartResult])] = Nil)
+  def writeFetchResponse(buf: ByteBuffer,
+                         results: Seq[(String, Seq[FetchV12PartResult])],
+                         version: Int = 4, error: Short = 0,
+                         sessionId: Int = 0, throttleMs: Int = 0,
+                         unknownIds: Seq[(java.util.UUID, Seq[FetchV12PartResult])] = Nil)
       : Unit = {
-    buf.putInt(throttleMs)
-    buf.putShort(error)
-    buf.putInt(sessionId)
-    val unk = if (version >= 13) unknownIds else Nil
-    writeCompactArrayLen(buf, results.size + unk.size)
-    def putParts(parts: Seq[FetchV12PartResult]): Unit = {
-      writeCompactArrayLen(buf, parts.size)
-      parts.foreach { r =>
-        buf.putInt(r.partition)
-        buf.putShort(r.error)
-        buf.putLong(r.highWatermark)
-        buf.putLong(r.lastStable)
-        buf.putLong(r.logStart)
-        writeCompactArrayLen(buf, r.aborted.size)
-        r.aborted.foreach { case (pid, first) =>
-          buf.putLong(pid)
-          buf.putLong(first)
-          writeEmptyTaggedFields(buf)
-        }
-        buf.putInt(-1) // preferred_read_replica
-        writeCompactBytes(buf, r.records)
-        writeEmptyTaggedFields(buf)
-      }
-      writeEmptyTaggedFields(buf)
-    }
-    results.foreach { case (topic, parts) =>
-      if (version >= 13) putUuid(buf, topicUuid(topic))
-      else writeCompactString(buf, topic)
-      putParts(parts)
-    }
-    unk.foreach { case (id, parts) =>
-      putUuid(buf, id)
-      putParts(parts)
-    }
-    writeEmptyTaggedFields(buf)
-  }
-
-  def readFetchResponseV12(buf: ByteBuffer, version: Int = 12,
-                           resolveId: java.util.UUID => String = null)
-      : Seq[(String, Seq[FetchV12PartResult])] =
-    readFetchResponseV12Full(buf, version, resolveId)._3
-
-  /** Like [[readFetchResponseV12]] but surfacing the session header
-    * (top-level error code, session id). For v13+ responses, topics
-    * resolve through `resolveId` (an unresolvable id yields the uuid's
-    * string form so the caller still sees the row).
-    */
-  def readFetchResponseV12Full(buf: ByteBuffer, version: Int = 12,
-                               resolveId: java.util.UUID => String = null)
-      : (Short, Int, Seq[(String, Seq[FetchV12PartResult])]) = {
-    buf.getInt // throttle
-    val error = buf.getShort
-    val sessionId = buf.getInt
-    val out = (0 until readCompactArrayLen(buf)).map { _ =>
-      val t =
-        if (version >= 13) {
-          val u = getUuid(buf)
-          Option(resolveId).flatMap(f => Option(f(u))).getOrElse(u.toString)
-        } else readCompactString(buf)
-      val parts = (0 until readCompactArrayLen(buf)).map { _ =>
-        val p = buf.getInt
-        val err = buf.getShort
-        val hw = buf.getLong
-        val lso = buf.getLong
-        val ls = buf.getLong
-        val aborted = (0 until readCompactArrayLen(buf)).map { _ =>
-          val pid = buf.getLong
-          val first = buf.getLong
-          skipTaggedFields(buf)
-          (pid, first)
-        }
-        buf.getInt // preferred replica
-        val records = readCompactBytes(buf)
-        skipTaggedFields(buf)
-        FetchV12PartResult(p, err, hw, lso, ls, aborted, records)
-      }
-      skipTaggedFields(buf)
-      t -> parts
-    }
-    skipTaggedFields(buf)
-    (error, sessionId, out)
-  }
-
-  final case class MetadataV9Topic(name: String, partitions: Seq[Int],
-                                   error: Short = 0,
-                                   topicId: java.util.UUID = null)
-
-  def readMetadataResponseV9(buf: ByteBuffer, version: Int = 9)
-      : (String, Int, Seq[MetadataV9Topic]) = {
-    buf.getInt // throttle
-    val nBrokers = readCompactArrayLen(buf)
-    var host: String = null
-    var port = 0
-    (0 until nBrokers).foreach { _ =>
-      buf.getInt
-      host = readCompactString(buf)
-      port = buf.getInt
-      readCompactString(buf) // rack
-      skipTaggedFields(buf)
-    }
-    readCompactString(buf) // cluster id
-    buf.getInt // controller
-    val topics = (0 until readCompactArrayLen(buf)).map { _ =>
-      val err = buf.getShort
-      val name = readCompactString(buf)
-      val id = if (version >= 10) getUuid(buf) else null
-      buf.get()
-      val parts = (0 until readCompactArrayLen(buf)).map { _ =>
-        buf.getShort
-        val p = buf.getInt
-        buf.getInt; buf.getInt
-        (0 until readCompactArrayLen(buf)).foreach(_ => buf.getInt)
-        (0 until readCompactArrayLen(buf)).foreach(_ => buf.getInt)
-        (0 until readCompactArrayLen(buf)).foreach(_ => buf.getInt)
-        skipTaggedFields(buf)
-        p
-      }
-      buf.getInt // topic_authorized_operations
-      skipTaggedFields(buf)
-      MetadataV9Topic(name, parts, err, id)
-    }
-    if (version <= 10) buf.getInt // cluster_authorized_operations
-    skipTaggedFields(buf)
-    (host, port, topics)
-  }
-
-  /** Classic Metadata request, v1-v8: [topics] (null array = all),
-    * allow_auto_topic_creation(v4+), include-authorized-ops flags(v8+).
-    */
-  def readMetadataClassic(buf: ByteBuffer, version: Int = 1): Option[Seq[String]] =
-    readMetadataClassicFull(buf, version)._1
-
-  /** (requested topics, allow_auto_topic_creation) — the flag exists
-    * from v4 (KIP-4); earlier versions implicitly allow auto-creation.
-    */
-  def readMetadataClassicFull(buf: ByteBuffer,
-                              version: Int = 1): (Option[Seq[String]], Boolean) = {
-    val n = buf.getInt
-    val topics = if (n < 0) None else Some((0 until n).map(_ => readString(buf)))
-    val allowAuto = if (version >= 4) buf.get() != 0 else true
-    if (version >= 8) { buf.get(); buf.get() } // include_*_authorized_operations
-    (topics, allowAuto)
-  }
-
-  def writeMetadataClassic(buf: ByteBuffer, topics: Option[Seq[String]],
-                           version: Int = 1): Unit = {
-    topics match {
-      case None => buf.putInt(-1)
-      case Some(ts) => buf.putInt(ts.size); ts.foreach(writeString(buf, _))
-    }
-    if (version >= 4) buf.put(1: Byte)
-    if (version >= 8) { buf.put(0: Byte); buf.put(0: Byte) }
-    ()
-  }
-
-  /** Classic Metadata response, v1-v8 (MetadataResponse.json layout):
-    * throttle(v3+) [broker] cluster_id(v2+) controller_id [topic: error
-    * name is_internal [partition: error idx leader leader_epoch(v7+)
-    * replicas isr offline(v5+)] topic_authorized_operations(v8+)]
-    * cluster_authorized_operations(v8). Topics carry a per-topic error
-    * (3 = UNKNOWN_TOPIC_OR_PARTITION for explicitly requested absentees).
-    */
-  def writeMetadataResponse(buf: ByteBuffer, host: String, port: Int,
-                            topics: Seq[(String, Int, Short)],
-                            version: Int = 1): Unit = {
-    if (version >= 3) buf.putInt(0) // throttle
-    buf.putInt(1) // one broker
-    buf.putInt(0) // node_id
-    writeString(buf, host)
-    buf.putInt(port)
-    writeString(buf, null) // rack
-    if (version >= 2) writeString(buf, "graft") // cluster_id
-    buf.putInt(0) // controller id
-    buf.putInt(topics.size)
-    topics.foreach { case (t, nParts, err) =>
-      buf.putShort(err)
-      writeString(buf, t)
-      buf.put(0: Byte) // is_internal
-      buf.putInt(nParts)
-      (0 until nParts).foreach { p =>
-        buf.putShort(0) // error
-        buf.putInt(p)   // partition
-        buf.putInt(0)   // leader
-        if (version >= 7) buf.putInt(0) // leader_epoch
-        buf.putInt(1)   // replicas
-        buf.putInt(0)
-        buf.putInt(1)   // isr
-        buf.putInt(0)
-        if (version >= 5) buf.putInt(0) // offline_replicas
-      }
-      if (version >= 8) buf.putInt(Int.MinValue) // topic_authorized_operations
-    }
-    if (version >= 8) buf.putInt(Int.MinValue) // cluster_authorized_operations
-  }
-
-  def readMetadataResponse(buf: ByteBuffer,
-                           version: Int = 1): (String, Int, Seq[(String, Int, Short)]) = {
-    if (version >= 3) buf.getInt // throttle
-    var host: String = null
-    var port = 0
-    (0 until buf.getInt).foreach { _ =>
-      buf.getInt // node_id
-      host = readString(buf)
-      port = buf.getInt
-      readString(buf) // rack
-    }
-    if (version >= 2) readString(buf) // cluster_id
-    buf.getInt // controller
-    val topics = (0 until buf.getInt).map { _ =>
-      val err = buf.getShort
-      val name = readString(buf)
-      buf.get() // is_internal
-      val nParts = buf.getInt
-      (0 until nParts).foreach { _ =>
-        buf.getShort; buf.getInt; buf.getInt
-        if (version >= 7) buf.getInt
-        (0 until buf.getInt).foreach(_ => buf.getInt) // replicas
-        (0 until buf.getInt).foreach(_ => buf.getInt) // isr
-        if (version >= 5) (0 until buf.getInt).foreach(_ => buf.getInt)
-      }
-      if (version >= 8) buf.getInt
-      (name, nParts, err)
-    }
-    if (version >= 8) buf.getInt
-    (host, port, topics)
-  }
-
-  /** Classic Produce response, v3-v8 (ProduceResponse.json layout):
-    * [topic [partition error base_offset log_append_time
-    * log_start_offset(v5+) record_errors(v8+) error_message(v8+)]]
-    * throttle. The 4-tuple's last element is the partition's log-start
-    * offset. throttleMs > 0 tells the client to back off — the
-    * client-quota mechanism (T10 rate limiting).
-    */
-  def writeProduceResponse(buf: ByteBuffer,
-                           results: Seq[(String, Seq[(Int, Short, Long, Long)])],
-                           throttleMs: Int = 0, version: Int = 3): Unit = {
-    buf.putInt(results.size)
-    results.foreach { case (topic, parts) =>
-      writeString(buf, topic)
-      buf.putInt(parts.size)
-      parts.foreach { case (p, err, baseOffset, logStart) =>
-        buf.putInt(p)
-        buf.putShort(err)
-        buf.putLong(baseOffset)
-        buf.putLong(-1L) // log_append_time
-        if (version >= 5) buf.putLong(logStart)
-        if (version >= 8) {
-          buf.putInt(0) // record_errors: none (whole batch accepted/rejected)
-          writeString(buf, null) // error_message
-        }
-      }
-    }
-    buf.putInt(throttleMs)
-  }
-
-  /** Reads a classic Produce response (v3-v8) incl. the trailing throttle. */
-  def readProduceResponse(buf: ByteBuffer,
-                          version: Int = 3): (Seq[(String, Seq[(Int, Short, Long)])], Int) = {
-    val topics = (0 until buf.getInt).map { _ =>
-      val t = readString(buf)
-      t -> (0 until buf.getInt).map { _ =>
-        val p = buf.getInt
-        val err = buf.getShort
-        val off = buf.getLong
-        buf.getLong // log_append_time
-        if (version >= 5) buf.getLong // log_start_offset
-        if (version >= 8) {
-          (0 until buf.getInt).foreach { _ => buf.getInt; readString(buf) }
-          readString(buf) // error_message
-        }
-        (p, err, off)
-      }
-    }
-    (topics, buf.getInt)
-  }
-
-  /** Classic Fetch response, v4-v11 (FetchResponse.json layout):
-    * throttle error+session(v7+) [topic [partition error hw lso
-    * log_start(v5+) [aborted: pid first_offset]
-    * preferred_read_replica(v11+) records]].
-    */
-  def writeFetchResponseClassic(buf: ByteBuffer,
-                                results: Seq[(String, Seq[FetchV12PartResult])],
-                                version: Int = 4, error: Short = 0,
-                                sessionId: Int = 0,
-                                throttleMs: Int = 0): Unit = {
+    val c = new Codec(version >= 12)
     buf.putInt(throttleMs)
     if (version >= 7) {
       buf.putShort(error)
       buf.putInt(sessionId)
     }
-    buf.putInt(results.size)
-    results.foreach { case (topic, parts) =>
-      writeString(buf, topic)
-      buf.putInt(parts.size)
+    val unk = if (version >= 13) unknownIds else Nil
+    c.putLen(buf, results.size + unk.size)
+    def putParts(parts: Seq[FetchV12PartResult]): Unit = {
+      c.putLen(buf, parts.size)
       parts.foreach { r =>
         buf.putInt(r.partition)
         buf.putShort(r.error)
         buf.putLong(r.highWatermark)
         buf.putLong(r.lastStable)
         if (version >= 5) buf.putLong(r.logStart)
-        buf.putInt(r.aborted.size)
+        c.putLen(buf, r.aborted.size)
         r.aborted.foreach { case (pid, first) =>
-          buf.putLong(pid); buf.putLong(first)
+          buf.putLong(pid)
+          buf.putLong(first)
+          c.putTags(buf)
         }
         if (version >= 11) buf.putInt(-1) // preferred_read_replica
-        writeBytes(buf, r.records)
+        c.putBytes(buf, r.records)
+        c.putTags(buf)
       }
+      c.putTags(buf)
     }
+    results.foreach { case (topic, parts) =>
+      if (version >= 13) putUuid(buf, topicUuid(topic))
+      else c.putStr(buf, topic)
+      putParts(parts)
+    }
+    unk.foreach { case (id, parts) =>
+      putUuid(buf, id)
+      putParts(parts)
+    }
+    c.putTags(buf)
   }
 
-  def readFetchResponseClassic(buf: ByteBuffer,
-                               version: Int = 4): Seq[(String, Seq[FetchV12PartResult])] =
-    readFetchResponseClassicFull(buf, version)._3
-
-  def readFetchResponseClassicFull(buf: ByteBuffer, version: Int = 4)
+  /** (top-level error code, session id, topics) of a Fetch response;
+    * (0, 0) before v7, which has no session header. For v13+ responses,
+    * topics resolve through `resolveId` (an unresolvable id yields the
+    * uuid's string form so the caller still sees the row).
+    */
+  def readFetchResponse(buf: ByteBuffer, version: Int = 4,
+                        resolveId: java.util.UUID => String = null)
       : (Short, Int, Seq[(String, Seq[FetchV12PartResult])]) = {
+    val c = new Codec(version >= 12)
     buf.getInt // throttle
     val (error, sessionId) =
       if (version >= 7) (buf.getShort, buf.getInt) else (0.toShort, 0)
-    val topics = (0 until buf.getInt).map { _ =>
-      val t = readString(buf)
-      t -> (0 until buf.getInt).map { _ =>
+    val topics = (0 until c.len(buf)).map { _ =>
+      val t =
+        if (version >= 13) {
+          val u = getUuid(buf)
+          Option(resolveId).flatMap(f => Option(f(u))).getOrElse(u.toString)
+        } else c.str(buf)
+      val parts = (0 until c.len(buf)).map { _ =>
         val p = buf.getInt
         val err = buf.getShort
         val hw = buf.getLong
         val lso = buf.getLong
         val ls = if (version >= 5) buf.getLong else -1L
-        val aborted = (0 until buf.getInt).map(_ => (buf.getLong, buf.getLong))
+        val aborted = (0 until c.len(buf)).map { _ =>
+          val a = (buf.getLong, buf.getLong)
+          c.tags(buf)
+          a
+        }
         if (version >= 11) buf.getInt // preferred_read_replica
-        FetchV12PartResult(p, err, hw, lso, ls, aborted, readBytes(buf))
+        val records = c.bytes(buf)
+        c.tags(buf)
+        FetchV12PartResult(p, err, hw, lso, ls, aborted, records)
       }
+      c.tags(buf)
+      t -> parts
     }
+    c.tags(buf)
     (error, sessionId, topics)
   }
+
+  // The benchmark harness (perfbench) compiles against these names, so
+  // they stay as aliases of the merged codecs at the versions it speaks.
+  def writeProduceV9(buf: ByteBuffer, r: ProduceRequest): Unit = writeProduce(buf, r, 9)
+  def readProduceResponseV9(buf: ByteBuffer): (Seq[(String, Seq[(Int, Short, Long)])], Int) =
+    readProduceResponse(buf, 9)
+  def writeFetchV12(buf: ByteBuffer, r: FetchRequest, version: Int = 12): Unit =
+    writeFetch(buf, r, version)
+  def readFetchResponseV12(buf: ByteBuffer, version: Int = 12,
+                           resolveId: java.util.UUID => String = null)
+      : Seq[(String, Seq[FetchV12PartResult])] =
+    readFetchResponse(buf, version, resolveId)._3
 
   // ------------------------------------------------ ACL admin (29/30)
 

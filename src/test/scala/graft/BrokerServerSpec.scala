@@ -80,9 +80,9 @@ class BrokerServerSpec extends SparkSpec {
       // a modern client's first frame: ApiVersions v3, flexible header
       // with an unknown tagged field the broker has to skip
       val av = flexRequest(sock, 18, 3, 70) { b =>
-        W.writeApiVersionsV3(b, "test-client", "1.0")
+        W.writeApiVersions(b, "test-client", "1.0", 3)
       }
-      val apis = W.readApiVersionsResponseV3(av)
+      val apis = W.readApiVersionsResponse(av, 3)
       assert(apis.contains((18, 0, 4)))
       assert(apis.contains((3, 1, 12)))
 
@@ -94,16 +94,18 @@ class BrokerServerSpec extends SparkSpec {
 
       // Metadata v9, all topics (null compact array); response header v1
       // carries tagged fields before the flexible body
-      val md = flexRequest(sock, 3, 9, 72)(b => W.writeMetadataV9(b, None))
+      val md = flexRequest(sock, 3, 9, 72)(b =>
+        W.writeMetadata(b, None, allowAutoCreate = false, version = 9))
       W.skipTaggedFields(md)
-      val (mdHost, mdPort, topics) = W.readMetadataResponseV9(md)
+      val (mdHost, mdPort, topics) = W.readMetadataResponse(md, 9)
       assert(mdHost === "127.0.0.1" && mdPort === broker.boundPort)
       assert(topics.map(t => t.name -> t.partitions.size) === Seq("flex" -> 3))
 
       // Metadata v9 with an explicit compact topic list
-      val md2 = flexRequest(sock, 3, 9, 73)(b => W.writeMetadataV9(b, Some(Seq("flex"))))
+      val md2 = flexRequest(sock, 3, 9, 73)(b =>
+        W.writeMetadata(b, Some(Seq("flex")), allowAutoCreate = false, version = 9))
       W.skipTaggedFields(md2)
-      val (_, _, topics2) = W.readMetadataResponseV9(md2)
+      val (_, _, topics2) = W.readMetadataResponse(md2, 9)
       assert(topics2.map(_.name) === Seq("flex"))
 
       // the same connection still speaks classic frames afterwards
@@ -117,19 +119,19 @@ class BrokerServerSpec extends SparkSpec {
         (0 until 2).map(i => RecordBatchCodec.Record(
           i, i.toLong, s"k$i".getBytes, s"v$i".getBytes, Nil))))
       val pr = flexRequest(sock, 0, 9, 75) { b =>
-        W.writeProduceV9(b, W.ProduceRequest(1, 30000, Seq(
-          W.ProduceTopic("flex", Seq(W.ProducePartition(0, batch))))))
+        W.writeProduce(b, W.ProduceRequest(1, 30000, Seq(
+          W.ProduceTopic("flex", Seq(W.ProducePartition(0, batch))))), 9)
       }
       W.skipTaggedFields(pr) // response header v1
-      val (pResults, _) = W.readProduceResponseV9(pr)
+      val (pResults, _) = W.readProduceResponse(pr, 9)
       assert(pResults === Seq("flex" -> Seq((0, 0.toShort, 0L))))
 
       val fr = flexRequest(sock, 1, 12, 76) { b =>
-        W.writeFetchV12(b, W.FetchRequest(500, 1, 1 << 20, 0, Seq(
-          W.FetchTopic("flex", Seq(W.FetchPartition(0, 0L, 1 << 20))))))
+        W.writeFetch(b, W.FetchRequest(500, 1, 1 << 20, 0, Seq(
+          W.FetchTopic("flex", Seq(W.FetchPartition(0, 0L, 1 << 20))))), 12)
       }
       W.skipTaggedFields(fr)
-      val fParts = W.readFetchResponseV12(fr)
+      val fParts = W.readFetchResponse(fr, 12)._3
       assert(fParts.head._1 === "flex")
       val part0 = fParts.head._2.head
       assert(part0.highWatermark === 2L)
@@ -155,11 +157,11 @@ class BrokerServerSpec extends SparkSpec {
           0L, 0, 0, 1704067200000L, 1704067200000L, -1L, -1, -1,
           Seq(RecordBatchCodec.Record(0, 0L, s"k$v".getBytes, s"v$v".getBytes, Nil))))
         val pr = flexRequest(sock, 0, v.toShort, 500 + v) { b =>
-          W.writeProduceV9(b, W.ProduceRequest(1, 30000, Seq(
-            W.ProduceTopic("tid", Seq(W.ProducePartition(0, batch))))))
+          W.writeProduce(b, W.ProduceRequest(1, 30000, Seq(
+            W.ProduceTopic("tid", Seq(W.ProducePartition(0, batch))))), 9)
         }
         W.skipTaggedFields(pr)
-        val (pResults, _) = W.readProduceResponseV9(pr)
+        val (pResults, _) = W.readProduceResponse(pr, 9)
         assert(pResults === Seq("tid" -> Seq((0, 0.toShort, i.toLong))), s"produce v$v")
       }
       // Fetch v13-v16: topics addressed by the name-derived uuid; every
@@ -169,11 +171,11 @@ class BrokerServerSpec extends SparkSpec {
         u => if (u == W.topicUuid("tid")) "tid" else null
       (13 to 16).foreach { v =>
         val fr = flexRequest(sock, 1, v.toShort, 520 + v) { b =>
-          W.writeFetchV12(b, W.FetchRequest(500, 1, 1 << 20, 0, Seq(
+          W.writeFetch(b, W.FetchRequest(500, 1, 1 << 20, 0, Seq(
             W.FetchTopic("tid", Seq(W.FetchPartition(0, 0L, 1 << 20))))), v)
         }
         W.skipTaggedFields(fr)
-        val parts = W.readFetchResponseV12(fr, v, resolve)
+        val parts = W.readFetchResponse(fr, v, resolve)._3
         assert(parts.head._1 === "tid", s"fetch v$v")
         val p0 = parts.head._2.head
         assert(p0.error === 0 && p0.highWatermark === 2L, s"fetch v$v")
@@ -185,27 +187,27 @@ class BrokerServerSpec extends SparkSpec {
       // a v16 full fetch (epoch 0) establishes a session, and an empty
       // v16 incremental serves newly-arrived data by remembered offset
       val fs1 = flexRequest(sock, 1, 16, 530) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
           W.FetchTopic("tid", Seq(W.FetchPartition(0, 2L, 1 << 20)))),
           sessionId = 0, sessionEpoch = 0), 16)
       }
       W.skipTaggedFields(fs1)
-      val (se1, ssid, _) = W.readFetchResponseV12Full(fs1, 16, resolve)
+      val (se1, ssid, _) = W.readFetchResponse(fs1, 16, resolve)
       assert(se1 === 0 && ssid > 0)
       val batch3 = RecordBatchCodec.encode(RecordBatchCodec.Batch(
         0L, 0, 0, 1704067200000L, 1704067200000L, -1L, -1, -1,
         Seq(RecordBatchCodec.Record(0, 0L, "k12".getBytes, "v12".getBytes, Nil))))
       val pr3 = flexRequest(sock, 0, 11, 531) { b =>
-        W.writeProduceV9(b, W.ProduceRequest(1, 30000, Seq(
-          W.ProduceTopic("tid", Seq(W.ProducePartition(0, batch3))))))
+        W.writeProduce(b, W.ProduceRequest(1, 30000, Seq(
+          W.ProduceTopic("tid", Seq(W.ProducePartition(0, batch3))))), 9)
       }
       W.skipTaggedFields(pr3)
       val fs2 = flexRequest(sock, 1, 16, 532) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
           sessionId = ssid, sessionEpoch = 1), 16)
       }
       W.skipTaggedFields(fs2)
-      val (se2, _, sparts) = W.readFetchResponseV12Full(fs2, 16, resolve)
+      val (se2, _, sparts) = W.readFetchResponse(fs2, 16, resolve)
       assert(se2 === 0 && sparts.map(_._1) === Seq("tid"))
       assert(RecordBatchCodec.decode(sparts.head._2.head.records)
         .records.map(r => new String(r.value)) === Seq("v12"))
@@ -214,12 +216,12 @@ class BrokerServerSpec extends SparkSpec {
       // request id echoed, storage untouched
       val bogus = java.util.UUID.fromString("deadbeef-0000-4000-8000-000000000000")
       val frBad = flexRequest(sock, 1, 16, 540) { b =>
-        W.writeFetchV12(b, W.FetchRequest(500, 1, 1 << 20, 0, Seq(
+        W.writeFetch(b, W.FetchRequest(500, 1, 1 << 20, 0, Seq(
           W.FetchTopic(null, Seq(W.FetchPartition(0, 0L, 1 << 20)), bogus))), 16)
       }
       W.skipTaggedFields(frBad)
-      val badParts = W.readFetchResponseV12(frBad, 16,
-        u => if (u == bogus) "echoed" else null)
+      val badParts = W.readFetchResponse(frBad, 16,
+        u => if (u == bogus) "echoed" else null)._3
       assert(badParts.map(_._1) === Seq("echoed"))
       val bad0 = badParts.head._2.head
       assert(bad0.partition === 0 && bad0.error === 100 &&
@@ -229,9 +231,9 @@ class BrokerServerSpec extends SparkSpec {
       // (v11+ also drops the cluster-authorized-operations tail)
       (10 to 12).foreach { v =>
         val md = flexRequest(sock, 3, v.toShort, 560 + v)(b =>
-          W.writeMetadataV9(b, Some(Seq("tid")), version = v))
+          W.writeMetadata(b, Some(Seq("tid")), allowAutoCreate = false, version = v))
         W.skipTaggedFields(md)
-        val (_, _, ts) = W.readMetadataResponseV9(md, v)
+        val (_, _, ts) = W.readMetadataResponse(md, v)
         assert(ts.map(_.name) === Seq("tid"), s"metadata v$v")
         assert(ts.head.topicId === W.topicUuid("tid"), s"metadata v$v")
       }
@@ -250,7 +252,7 @@ class BrokerServerSpec extends SparkSpec {
         W.writeEmptyTaggedFields(b)
       }
       W.skipTaggedFields(mdBad)
-      val (_, _, ts12) = W.readMetadataResponseV9(mdBad, 12)
+      val (_, _, ts12) = W.readMetadataResponse(mdBad, 12)
       assert(ts12.exists(t => t.name == "tid" && t.error == 0))
       val unk12 = ts12.find(_.topicId == bogus).get
       assert(unk12.error === 100 && unk12.name === null &&
@@ -270,7 +272,7 @@ class BrokerServerSpec extends SparkSpec {
           W.writeEmptyTaggedFields(b)
         }
         W.skipTaggedFields(mdOld)
-        val (_, _, tsOld) = W.readMetadataResponseV9(mdOld, v)
+        val (_, _, tsOld) = W.readMetadataResponse(mdOld, v)
         val unkOld = tsOld.find(_.topicId == bogus).get
         assert(unkOld.error === 100 && unkOld.name === "" &&
           unkOld.partitions.isEmpty, s"metadata v$v unknown-id row")
@@ -291,11 +293,11 @@ class BrokerServerSpec extends SparkSpec {
           0L, 0, 0, 1704067200000L, 1704067200000L, -1L, -1, -1,
           Seq(RecordBatchCodec.Record(0, 0L, k.getBytes, v.getBytes, Nil))))
         val pr = flexRequest(sock, 0, 9, corr) { b =>
-          W.writeProduceV9(b, W.ProduceRequest(1, 30000, Seq(
-            W.ProduceTopic("sess", Seq(W.ProducePartition(0, batch))))))
+          W.writeProduce(b, W.ProduceRequest(1, 30000, Seq(
+            W.ProduceTopic("sess", Seq(W.ProducePartition(0, batch))))), 9)
         }
         W.skipTaggedFields(pr)
-        val (res, _) = W.readProduceResponseV9(pr)
+        val (res, _) = W.readProduceResponse(pr, 9)
         assert(res.head._2.head._2 === 0)
       }
       produceOne(80, "k1", "v1")
@@ -303,13 +305,13 @@ class BrokerServerSpec extends SparkSpec {
       // 1. full fetch (epoch 0) establishes a session; every requested
       // partition is answered, data or not
       val fr1 = flexRequest(sock, 1, 12, 81) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
           W.FetchTopic("sess", Seq(
             W.FetchPartition(0, 0L, 1 << 20), W.FetchPartition(1, 0L, 1 << 20)))),
-          sessionId = 0, sessionEpoch = 0))
+          sessionId = 0, sessionEpoch = 0), 12)
       }
       W.skipTaggedFields(fr1)
-      val (e1, sid, parts1) = W.readFetchResponseV12Full(fr1)
+      val (e1, sid, parts1) = W.readFetchResponse(fr1, 12)
       assert(e1 === 0 && sid > 0)
       assert(parts1.head._2.map(_.partition).sorted === Seq(0, 1))
 
@@ -317,12 +319,12 @@ class BrokerServerSpec extends SparkSpec {
       // client consumed to offset 1 on p0; nothing new anywhere -> the
       // response omits BOTH partitions
       val fr2 = flexRequest(sock, 1, 12, 82) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
           W.FetchTopic("sess", Seq(W.FetchPartition(0, 1L, 1 << 20)))),
-          sessionId = sid, sessionEpoch = 1))
+          sessionId = sid, sessionEpoch = 1), 12)
       }
       W.skipTaggedFields(fr2)
-      val (e2, sid2, parts2) = W.readFetchResponseV12Full(fr2)
+      val (e2, sid2, parts2) = W.readFetchResponse(fr2, 12)
       assert(e2 === 0 && sid2 === sid)
       assert(parts2.isEmpty)
 
@@ -330,11 +332,11 @@ class BrokerServerSpec extends SparkSpec {
       // from the session's remembered offset, p1 stays omitted
       produceOne(83, "k2", "v2")
       val fr3 = flexRequest(sock, 1, 12, 84) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
-          sessionId = sid, sessionEpoch = 2))
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
+          sessionId = sid, sessionEpoch = 2), 12)
       }
       W.skipTaggedFields(fr3)
-      val (e3, _, parts3) = W.readFetchResponseV12Full(fr3)
+      val (e3, _, parts3) = W.readFetchResponse(fr3, 12)
       assert(e3 === 0)
       assert(parts3.map(_._1) === Seq("sess"))
       assert(parts3.head._2.map(_.partition) === Seq(0))
@@ -343,34 +345,34 @@ class BrokerServerSpec extends SparkSpec {
 
       // 4. a skipped epoch is rejected (INVALID_FETCH_SESSION_EPOCH)...
       val frBad = flexRequest(sock, 1, 12, 85) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
-          sessionId = sid, sessionEpoch = 10))
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
+          sessionId = sid, sessionEpoch = 10), 12)
       }
       W.skipTaggedFields(frBad)
-      assert(W.readFetchResponseV12Full(frBad)._1 === 71)
+      assert(W.readFetchResponse(frBad, 12)._1 === 71)
       // ...and an unknown session id too (FETCH_SESSION_ID_NOT_FOUND)
       val frNone = flexRequest(sock, 1, 12, 86) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
-          sessionId = 999999, sessionEpoch = 5))
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
+          sessionId = 999999, sessionEpoch = 5), 12)
       }
       W.skipTaggedFields(frNone)
-      assert(W.readFetchResponseV12Full(frNone)._1 === 70)
+      assert(W.readFetchResponse(frNone, 12)._1 === 70)
 
       // 5. forgotten_topics_data drops a partition from the session: new
       // data on p0 no longer comes back once p0 is forgotten
       produceOne(87, "k3", "v3")
       val fr4 = flexRequest(sock, 1, 12, 88) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
-          sessionId = sid, sessionEpoch = 3, forgotten = Seq("sess" -> Seq(0))))
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Nil,
+          sessionId = sid, sessionEpoch = 3, forgotten = Seq("sess" -> Seq(0))), 12)
       }
       W.skipTaggedFields(fr4)
-      assert(W.readFetchResponseV12Full(fr4)._3.isEmpty)
+      assert(W.readFetchResponse(fr4, 12)._3.isEmpty)
 
       sock.close()
     } finally broker.close()
   }
 
-  test("fetch responses above 4 MiB succeed: buffer sized from the request's max_bytes") {
+  test("fetch responses above 4 MiB succeed: buffer sized from the records sent") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-broker-big").toString
     val storage = new ParquetStorage(spark, root)
@@ -390,11 +392,11 @@ class BrokerServerSpec extends SparkSpec {
     try {
       val sock = new Socket("127.0.0.1", broker.boundPort)
       val fr = flexRequest(sock, 1, 12, 90) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 8 << 20, 0, Seq(
-          W.FetchTopic("big", Seq(W.FetchPartition(0, 0L, 8 << 20))))))
+        W.writeFetch(b, W.FetchRequest(0, 0, 8 << 20, 0, Seq(
+          W.FetchTopic("big", Seq(W.FetchPartition(0, 0L, 8 << 20))))), 12)
       }
       W.skipTaggedFields(fr)
-      val parts = W.readFetchResponseV12(fr)
+      val parts = W.readFetchResponse(fr, 12)._3
       val decoded = RecordBatchCodec.decode(parts.head._2.head.records)
       assert(new String(decoded.records.head.value).length === (5 << 20))
 
@@ -402,15 +404,90 @@ class BrokerServerSpec extends SparkSpec {
       // min-one-record overshoot) — the response outgrows every
       // request-derived pre-size and must not BufferOverflow-and-drop
       val frSmall = flexRequest(sock, 1, 12, 91) { b =>
-        W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
-          W.FetchTopic("big", Seq(W.FetchPartition(0, 0L, 1 << 20))))))
+        W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
+          W.FetchTopic("big", Seq(W.FetchPartition(0, 0L, 1 << 20))))), 12)
       }
       W.skipTaggedFields(frSmall)
-      val partsSmall = W.readFetchResponseV12(frSmall)
+      val partsSmall = W.readFetchResponse(frSmall, 12)._3
       val decodedSmall = RecordBatchCodec.decode(partsSmall.head._2.head.records)
       assert(new String(decodedSmall.records.head.value).length === (5 << 20))
       sock.close()
     } finally broker.close()
+  }
+
+  test("ApiVersions answers every served version in that version's layout") {
+    val root = java.nio.file.Files.createTempDirectory("graft-broker-av").toString
+    val broker = new BrokerServer(new ParquetStorage(spark, root))
+    val sock = new Socket("127.0.0.1", broker.boundPort)
+    try {
+      // v1+ responses end in throttle_time_ms; v3+ are flexible bodies
+      // behind a v0 response header
+      (0 to 4).foreach { v =>
+        val send = if (v >= 3) flexRequest _ else request _
+        val av = send(sock, 18, v.toShort, 600 + v)(b =>
+          W.writeApiVersions(b, "test-client", "1.0", v))
+        assert(W.readApiVersionsResponse(av, v) === W.SupportedApis, s"api versions v$v")
+        assert(av.remaining() === 0, s"api versions v$v")
+      }
+      // above the max: UNSUPPORTED_VERSION in the v0 body, as Kafka does
+      val high = flexRequest(sock, 18, 5, 605)(_ => ())
+      assert(high.getShort === 35)
+      assert(high.getInt === W.SupportedApis.size)
+      high.position(high.position() + 6 * W.SupportedApis.size)
+      assert(high.remaining() === 0)
+    } finally { sock.close(); broker.close() }
+  }
+
+  test("a read_committed Fetch v15 reuses the response buffer like v12 does") {
+    val root = java.nio.file.Files.createTempDirectory("graft-broker-alloc").toString
+    val storage = new ParquetStorage(spark, root)
+    storage.createTopic("alloc", 1)
+    val broker = new BrokerServer(storage)
+    val sock = new Socket("127.0.0.1", broker.boundPort)
+    try {
+      val batch = RecordBatchCodec.encode(RecordBatchCodec.Batch(
+        0L, 0, 0, 1704067200000L, 1704067200001L, -1L, -1, -1,
+        (0 until 2).map(i => RecordBatchCodec.Record(
+          i, i.toLong, s"k$i".getBytes, s"v$i".getBytes, Nil))))
+      val pr = flexRequest(sock, 0, 9, 1) { b =>
+        W.writeProduce(b, W.ProduceRequest(1, 30000, Seq(
+          W.ProduceTopic("alloc", Seq(W.ProducePartition(0, batch))))), 9)
+      }
+      W.skipTaggedFields(pr)
+      assert(W.readProduceResponse(pr, 9)._1 === Seq("alloc" -> Seq((0, 0.toShort, 0L))))
+      // sessionless and read_committed: in a v15 body isolation_level and
+      // session_id sit where max_bytes sits in a v12 body
+      def fetch(v: Int, corr: Int): Unit = {
+        val fr = flexRequest(sock, 1, v.toShort, corr) { b =>
+          W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 1, Seq(
+            W.FetchTopic("alloc", Seq(W.FetchPartition(0, 0L, 1 << 20))))), v)
+        }
+        W.skipTaggedFields(fr)
+        val parts = W.readFetchResponse(fr, v,
+          u => if (u == W.topicUuid("alloc")) "alloc" else null)._3
+        assert(fr.remaining() === 0)
+        assert(parts.head._2.head.highWatermark === 2L, s"fetch v$v")
+      }
+      val threads = java.lang.management.ManagementFactory.getThreadMXBean
+        .asInstanceOf[com.sun.management.ThreadMXBean]
+      def allocatedPerThread(): Map[Long, Long] = {
+        val ids = threads.getAllThreadIds
+        ids.zip(threads.getThreadAllocatedBytes(ids)).filter(_._2 >= 0).toMap
+      }
+      // per-thread deltas: a thread that ends in between takes its count
+      // with it, so the difference of two all-thread sums can go negative
+      def allocatedBy(v: Int, corr: Int): Long = {
+        val before = allocatedPerThread()
+        (0 until 30).foreach(i => fetch(v, corr + i))
+        allocatedPerThread().iterator
+          .map { case (id, n) => n - before.getOrElse(id, 0L) }.sum
+      }
+      (0 until 5).foreach { i => fetch(12, 10 + i); fetch(15, 20 + i) } // warm-up
+      val v12 = allocatedBy(12, 100)
+      val v15 = allocatedBy(15, 200)
+      assert(v15 <= 2 * v12 + (8L << 20),
+        s"30 v15 fetches allocated $v15 bytes, 30 v12 fetches $v12")
+    } finally { sock.close(); broker.close() }
   }
 
   test("every advertised classic version of Produce/Fetch/Metadata round-trips") {
@@ -425,16 +502,18 @@ class BrokerServerSpec extends SparkSpec {
       // as UNKNOWN_TOPIC_OR_PARTITION (3), never as a fabricated topic
       (1 to 8).foreach { v =>
         val md = request(sock, 3, v.toShort, 100 + v) { b =>
-          W.writeMetadataClassic(b, Some(Seq("vm", "ghost")), v)
+          W.writeMetadata(b, Some(Seq("vm", "ghost")), version = v)
         }
-        val (h, p, topics) = W.readMetadataResponse(md, v)
+        val (h, p, mdTopics) = W.readMetadataResponse(md, v)
+        val topics = mdTopics.map(t => (t.name, t.partitions.size, t.error))
         assert(h === "127.0.0.1" && p === broker.boundPort, s"metadata v$v")
         assert(topics.toSet ===
           Set(("vm", 2, 0.toShort), ("ghost", 0, 3.toShort)), s"metadata v$v")
       }
       // ... and the all-topics (null array) form
-      val mdAll = request(sock, 3, 5, 120)(b => W.writeMetadataClassic(b, None, 5))
-      assert(W.readMetadataResponse(mdAll, 5)._3 === Seq(("vm", 2, 0.toShort)))
+      val mdAll = request(sock, 3, 5, 120)(b => W.writeMetadata(b, None, version = 5))
+      assert(W.readMetadataResponse(mdAll, 5)._3
+        .map(t => (t.name, t.partitions.size, t.error)) === Seq(("vm", 2, 0.toShort)))
 
       // Produce v3-v8: the request layout is constant, the response grows
       // log_start_offset (v5+) and record_errors (v8); offsets advance
@@ -460,7 +539,7 @@ class BrokerServerSpec extends SparkSpec {
           W.writeFetch(b, W.FetchRequest(500, 1, 1 << 20, 0, Seq(
             W.FetchTopic("vm", Seq(W.FetchPartition(0, 0L, 1 << 20))))), v)
         }
-        val parts = W.readFetchResponseClassic(fr, v)
+        val parts = W.readFetchResponse(fr, v)._3
         assert(parts.head._1 === "vm", s"fetch v$v")
         val p0 = parts.head._2.head
         assert(p0.error === 0 && p0.highWatermark === 6L, s"fetch v$v")
@@ -1695,7 +1774,7 @@ class BrokerServerSpec extends SparkSpec {
       assert(bareToken(clientFinal) === expectServerFinal) // mutual auth
 
       // authenticated: the same connection now serves Kafka frames again
-      val md = request(sock, 3, 1, 951)(b => W.writeMetadataClassic(b, None, 1))
+      val md = request(sock, 3, 1, 951)(b => W.writeMetadata(b, None, version = 1))
 
       // ---- SCRAM admin: upsert a SHA-512 user via the salted password
       val salt = Array.tabulate[Byte](16)(_.toByte)
@@ -1793,18 +1872,18 @@ class BrokerServerSpec extends SparkSpec {
       val sock = new Socket("127.0.0.1", broker.boundPort)
       // request says allow_auto_topic_creation=false → UNKNOWN, untouched
       val md0 = flexRequest(sock, 3, 9, 980)(b =>
-        W.writeMetadataV9(b, Some(Seq("fresh")), allowAutoCreate = false))
+        W.writeMetadata(b, Some(Seq("fresh")), allowAutoCreate = false, version = 9))
       W.skipTaggedFields(md0)
-      val (_, _, t0) = W.readMetadataResponseV9(md0)
+      val (_, _, t0) = W.readMetadataResponse(md0, 9)
       assert(t0.map(t => t.name -> t.error) === Seq("fresh" -> 3.toShort))
       assert(!storage.topics.contains("fresh"))
 
       // both sides opt in → the topic is REALLY created (declared
       // partition count, durable) and reported healthy
       val md1 = flexRequest(sock, 3, 9, 981)(b =>
-        W.writeMetadataV9(b, Some(Seq("fresh")), allowAutoCreate = true))
+        W.writeMetadata(b, Some(Seq("fresh")), allowAutoCreate = true, version = 9))
       W.skipTaggedFields(md1)
-      val (_, _, t1) = W.readMetadataResponseV9(md1)
+      val (_, _, t1) = W.readMetadataResponse(md1, 9)
       assert(t1.map(t => (t.name, t.partitions.size, t.error)) ===
         Seq(("fresh", 3, 0.toShort)))
       assert(storage.partitionCount("fresh") === 3)
@@ -1816,9 +1895,9 @@ class BrokerServerSpec extends SparkSpec {
     try {
       val sock2 = new Socket("127.0.0.1", broker2.boundPort)
       val md2 = flexRequest(sock2, 3, 9, 982)(b =>
-        W.writeMetadataV9(b, Some(Seq("fresh2")), allowAutoCreate = true))
+        W.writeMetadata(b, Some(Seq("fresh2")), allowAutoCreate = true, version = 9))
       W.skipTaggedFields(md2)
-      assert(W.readMetadataResponseV9(md2)._3.head.error === 3.toShort)
+      assert(W.readMetadataResponse(md2, 9)._3.head.error === 3.toShort)
       assert(!storage.topics.contains("fresh2"))
       sock2.close()
     } finally broker2.close()
@@ -1894,9 +1973,9 @@ class BrokerServerSpec extends SparkSpec {
       val sock = new Socket("127.0.0.1", broker.boundPort)
       def mdPartitions(corr: Int): Int = {
         val md = flexRequest(sock, 3, 9, corr)(b =>
-          W.writeMetadataV9(b, Some(Seq("probe")), allowAutoCreate = false))
+          W.writeMetadata(b, Some(Seq("probe")), allowAutoCreate = false, version = 9))
         W.skipTaggedFields(md)
-        W.readMetadataResponseV9(md)._3.head.partitions.size
+        W.readMetadataResponse(md, 9)._3.head.partitions.size
       }
       assert(mdPartitions(990) === 1) // empty probe defaults to 1
       assert(mdPartitions(991) === 1) // served from the cache
@@ -1907,9 +1986,9 @@ class BrokerServerSpec extends SparkSpec {
       // unknown topics never enter the cache: raising one is a no-op
       broker.noteProducedPartition("ghost", 9)
       val md = flexRequest(sock, 3, 9, 993)(b =>
-        W.writeMetadataV9(b, Some(Seq("ghost")), allowAutoCreate = false))
+        W.writeMetadata(b, Some(Seq("ghost")), allowAutoCreate = false, version = 9))
       W.skipTaggedFields(md)
-      assert(W.readMetadataResponseV9(md)._3.head.error === 3.toShort)
+      assert(W.readMetadataResponse(md, 9)._3.head.error === 3.toShort)
       sock.close()
     } finally broker.close()
   }
@@ -1962,11 +2041,11 @@ class BrokerServerSpec extends SparkSpec {
           }))
       def produceBlob(corr: Int, blob: Array[Byte]): (Short, Long) = {
         val pr = flexRequest(sock, 0, 9, corr) { b =>
-          W.writeProduceV9(b, W.ProduceRequest(1, 30000, Seq(
-            W.ProduceTopic("mb", Seq(W.ProducePartition(0, blob))))))
+          W.writeProduce(b, W.ProduceRequest(1, 30000, Seq(
+            W.ProduceTopic("mb", Seq(W.ProducePartition(0, blob))))), 9)
         }
         W.skipTaggedFields(pr)
-        val (res, _) = W.readProduceResponseV9(pr)
+        val (res, _) = W.readProduceResponse(pr, 9)
         val (_, err, base) = res.head._2.head
         (err, base)
       }
@@ -2253,8 +2332,8 @@ class BrokerServerSpec extends SparkSpec {
       val sock = new Socket("127.0.0.1", broker.boundPort)
       def fetchThrottle(corr: Int): Int = {
         val fr = flexRequest(sock, 1, 12, corr) { b =>
-          W.writeFetchV12(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
-            W.FetchTopic("fq", Seq(W.FetchPartition(0, 0L, 1 << 20))))))
+          W.writeFetch(b, W.FetchRequest(0, 0, 1 << 20, 0, Seq(
+            W.FetchTopic("fq", Seq(W.FetchPartition(0, 0L, 1 << 20))))), 12)
         }
         W.skipTaggedFields(fr)
         fr.getInt // throttle_time_ms leads the v12 body

@@ -131,6 +131,279 @@ class CodecSpec extends AnyFunSuite with PropSupport {
     assert(d.records.head.value === null)
     assert(d.records.head.key !== null)
   }
+
+  test("Produce/Fetch/Metadata/ApiVersions bodies match pinned bytes at every layout change") {
+    // Round trips run the same codec on both ends, so a mistake both
+    // ends share (say, classic strings in a flexible version) would pass
+    // them. These are the exact body bytes, one fixed request and one
+    // fixed response at each version where a field appears or goes.
+    import java.nio.ByteBuffer
+    import graft.facade.WireProtocol._
+    def hex(write: ByteBuffer => Unit): String = {
+      val b = ByteBuffer.allocate(1 << 16)
+      write(b)
+      b.flip()
+      Iterator.continually(b.get()).take(b.remaining())
+        .map(x => f"${x & 0xff}%02x").mkString
+    }
+    // the reader of a pinned body must consume exactly its bytes
+    def parsed[T](h: String)(read: ByteBuffer => T): T = {
+      val b = ByteBuffer.wrap(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+      val r = read(b)
+      assert(b.remaining() === 0, s"trailing bytes after $h")
+      r
+    }
+
+    val produce = ProduceRequest(1, 30000, Seq(
+      ProduceTopic("t", Seq(ProducePartition(0, Array[Byte](1, 2, 3))))))
+    val produced = Seq("t" -> Seq((0, 0.toShort, 5L, 2L)))
+    Seq(
+      3 -> (
+        "ffff00010000753000000001000174000000010000000000000003010203",
+        "00000001000174000000010000000000000000000000000005ffffffffffffff" +
+        "ff00000007"),
+      5 -> (
+        "ffff00010000753000000001000174000000010000000000000003010203",
+        "00000001000174000000010000000000000000000000000005ffffffffffffff" +
+        "ff000000000000000200000007"),
+      8 -> (
+        "ffff00010000753000000001000174000000010000000000000003010203",
+        "00000001000174000000010000000000000000000000000005ffffffffffffff" +
+        "ff000000000000000200000000ffff00000007"),
+      9 -> (
+        "00000100007530020274020000000004010203000000",
+        "020274020000000000000000000000000005ffffffffffffffff000000000000" +
+        "0002010000000000000700"),
+      11 -> (
+        "00000100007530020274020000000004010203000000",
+        "020274020000000000000000000000000005ffffffffffffffff000000000000" +
+        "0002010000000000000700")).foreach { case (v, (req, resp)) =>
+      assert(hex(writeProduce(_, produce, v)) === req, s"produce v$v")
+      assert(hex(writeProduceResponse(_, produced, 7, v)) === resp,
+        s"produce response v$v")
+      val got = parsed(req)(readProduce(_, v))
+      assert(got.acks === 1 && got.timeoutMs === 30000 &&
+        got.topics.map(t => t.topic -> t.partitions.map(p =>
+          p.partition -> p.records.toSeq)) ===
+        Seq("t" -> Seq(0 -> Seq[Byte](1, 2, 3))), s"produce v$v")
+      assert(parsed(resp)(readProduceResponse(_, v)) ===
+        (Seq("t" -> Seq((0, 0.toShort, 5L))), 7), s"produce response v$v")
+    }
+
+    val unk = java.util.UUID.fromString("deadbeef-0000-4000-8000-00000000000f")
+    val resolve: java.util.UUID => String =
+      u => if (u == topicUuid("t")) "t" else null
+    val fetch = FetchRequest(500, 1, 65536, 1, Seq(
+      FetchTopic("t", Seq(FetchPartition(0, 7L, 4096)))),
+      sessionId = 42, sessionEpoch = 5, forgotten = Seq("t" -> Seq(2)))
+    val fetched = Seq("t" -> Seq(FetchV12PartResult(0, 0, 10L, 9L, 1L,
+      Seq((77L, 3L)), Array[Byte](1, 2, 3))))
+    val unknownFetched = Seq(unk -> Seq(FetchV12PartResult(5, 100, -1L, -1L,
+      -1L, Nil, Array.empty[Byte])))
+    Seq(
+      4 -> (
+        "ffffffff000001f4000000010001000001000000010001740000000100000000" +
+        "000000000000000700001000",
+        "000000070000000100017400000001000000000000000000000000000a000000" +
+        "000000000900000001000000000000004d000000000000000300000003010203"),
+      5 -> (
+        "ffffffff000001f4000000010001000001000000010001740000000100000000" +
+        "0000000000000007ffffffffffffffff00001000",
+        "000000070000000100017400000001000000000000000000000000000a000000" +
+        "0000000009000000000000000100000001000000000000004d00000000000000" +
+        "0300000003010203"),
+      7 -> (
+        "ffffffff000001f40000000100010000010000002a0000000500000001000174" +
+        "00000001000000000000000000000007ffffffffffffffff0000100000000001" +
+        "0001740000000100000002",
+        "0000000700000000002a00000001000174000000010000000000000000000000" +
+        "00000a0000000000000009000000000000000100000001000000000000004d00" +
+        "0000000000000300000003010203"),
+      9 -> (
+        "ffffffff000001f40000000100010000010000002a0000000500000001000174" +
+        "0000000100000000ffffffff0000000000000007ffffffffffffffff00001000" +
+        "000000010001740000000100000002",
+        "0000000700000000002a00000001000174000000010000000000000000000000" +
+        "00000a0000000000000009000000000000000100000001000000000000004d00" +
+        "0000000000000300000003010203"),
+      11 -> (
+        "ffffffff000001f40000000100010000010000002a0000000500000001000174" +
+        "0000000100000000ffffffff0000000000000007ffffffffffffffff00001000" +
+        "0000000100017400000001000000020000",
+        "0000000700000000002a00000001000174000000010000000000000000000000" +
+        "00000a0000000000000009000000000000000100000001000000000000004d00" +
+        "00000000000003ffffffff00000003010203"),
+      12 -> (
+        "ffffffff000001f40000000100010000010000002a0000000502027402000000" +
+        "00ffffffff0000000000000007ffffffffffffffffffffffff00001000000002" +
+        "02740200000002000100",
+        "0000000700000000002a02027402000000000000000000000000000a00000000" +
+        "00000009000000000000000102000000000000004d000000000000000300ffff" +
+        "ffff04010203000000"),
+      13 -> (
+        "ffffffff000001f40000000100010000010000002a00000005023e7e65b039d3" +
+        "37318511722a503ef5c20200000000ffffffff0000000000000007ffffffffff" +
+        "ffffffffffffff000010000000023e7e65b039d337318511722a503ef5c20200" +
+        "000002000100",
+        "0000000700000000002a033e7e65b039d337318511722a503ef5c20200000000" +
+        "0000000000000000000a00000000000000090000000000000001020000000000" +
+        "00004d000000000000000300ffffffff040102030000deadbeef000040008000" +
+        "00000000000f02000000050064ffffffffffffffffffffffffffffffffffffff" +
+        "ffffffffff01ffffffff01000000"),
+      15 -> (
+        "000001f40000000100010000010000002a00000005023e7e65b039d337318511" +
+        "722a503ef5c20200000000ffffffff0000000000000007ffffffffffffffffff" +
+        "ffffff000010000000023e7e65b039d337318511722a503ef5c2020000000200" +
+        "0100",
+        "0000000700000000002a033e7e65b039d337318511722a503ef5c20200000000" +
+        "0000000000000000000a00000000000000090000000000000001020000000000" +
+        "00004d000000000000000300ffffffff040102030000deadbeef000040008000" +
+        "00000000000f02000000050064ffffffffffffffffffffffffffffffffffffff" +
+        "ffffffffff01ffffffff01000000"),
+      17 -> (
+        "000001f40000000100010000010000002a00000005023e7e65b039d337318511" +
+        "722a503ef5c20200000000ffffffff0000000000000007ffffffffffffffffff" +
+        "ffffff000010000000023e7e65b039d337318511722a503ef5c2020000000200" +
+        "0100",
+        "0000000700000000002a033e7e65b039d337318511722a503ef5c20200000000" +
+        "0000000000000000000a00000000000000090000000000000001020000000000" +
+        "00004d000000000000000300ffffffff040102030000deadbeef000040008000" +
+        "00000000000f02000000050064ffffffffffffffffffffffffffffffffffffff" +
+        "ffffffffff01ffffffff01000000")).foreach { case (v, (req, resp)) =>
+      assert(hex(writeFetch(_, fetch, v)) === req, s"fetch v$v")
+      assert(hex(writeFetchResponse(_, fetched, v, 0, 42, 7, unknownFetched)) ===
+        resp, s"fetch response v$v")
+      val got = parsed(req)(readFetch(_, v, resolve))
+      assert(got.topics.map(t => t.topic -> t.partitions) ===
+        Seq("t" -> Seq(FetchPartition(0, 7L, 4096))), s"fetch v$v")
+      assert((got.maxWaitMs, got.minBytes, got.maxBytes, got.isolation) ===
+        ((500, 1, 65536, 1: Byte)), s"fetch v$v")
+      if (v >= 7) assert(got.sessionId === 42 && got.sessionEpoch === 5 &&
+        got.forgotten === Seq("t" -> Seq(2)), s"fetch v$v")
+      val (err, sid, topics) = parsed(resp)(readFetchResponse(_, v, resolve))
+      assert((err, sid) === (if (v >= 7) (0.toShort, 42) else (0.toShort, 0)),
+        s"fetch response v$v")
+      assert(topics.map(_._1) ===
+        (if (v >= 13) Seq("t", unk.toString) else Seq("t")), s"fetch response v$v")
+      val p = topics.head._2.head
+      assert((p.highWatermark, p.lastStable, p.logStart, p.aborted, p.records.toSeq) ===
+        ((10L, 9L, if (v >= 5) 1L else -1L, Seq((77L, 3L)), Seq[Byte](1, 2, 3))),
+        s"fetch response v$v")
+    }
+
+    val described = Seq(("t", 2, 0.toShort), ("u", 0, 3.toShort))
+    Seq(
+      1 -> (
+        "00000002000174000175",
+        "000000010000000000016800002384ffff000000000000000200000001740000" +
+        "0000020000000000000000000000000001000000000000000100000000000000" +
+        "0000010000000000000001000000000000000100000000000300017500000000" +
+        "00"),
+      2 -> (
+        "00000002000174000175",
+        "000000010000000000016800002384ffff000567726166740000000000000002" +
+        "0000000174000000000200000000000000000000000000010000000000000001" +
+        "0000000000000000000100000000000000010000000000000001000000000003" +
+        "0001750000000000"),
+      3 -> (
+        "00000002000174000175",
+        "00000000000000010000000000016800002384ffff0005677261667400000000" +
+        "0000000200000001740000000002000000000000000000000000000100000000" +
+        "0000000100000000000000000001000000000000000100000000000000010000" +
+        "000000030001750000000000"),
+      4 -> (
+        "0000000200017400017501",
+        "00000000000000010000000000016800002384ffff0005677261667400000000" +
+        "0000000200000001740000000002000000000000000000000000000100000000" +
+        "0000000100000000000000000001000000000000000100000000000000010000" +
+        "000000030001750000000000"),
+      5 -> (
+        "0000000200017400017501",
+        "00000000000000010000000000016800002384ffff0005677261667400000000" +
+        "0000000200000001740000000002000000000000000000000000000100000000" +
+        "0000000100000000000000000000000000010000000000000001000000000000" +
+        "0001000000000000000000030001750000000000"),
+      7 -> (
+        "0000000200017400017501",
+        "00000000000000010000000000016800002384ffff0005677261667400000000" +
+        "0000000200000001740000000002000000000000000000000000000000000001" +
+        "0000000000000001000000000000000000000000000100000000000000000000" +
+        "00010000000000000001000000000000000000030001750000000000"),
+      8 -> (
+        "00000002000174000175010000",
+        "00000000000000010000000000016800002384ffff0005677261667400000000" +
+        "0000000200000001740000000002000000000000000000000000000000000001" +
+        "0000000000000001000000000000000000000000000100000000000000000000" +
+        "0001000000000000000100000000000000008000000000030001750000000000" +
+        "8000000080000000"),
+      9 -> (
+        "0302740002750001000000",
+        "0000000002000000000268000023840000066772616674000000000300000274" +
+        "0003000000000000000000000000000002000000000200000000010000000000" +
+        "0001000000000000000002000000000200000000010080000000000003027500" +
+        "0180000000008000000000"),
+      10 -> (
+        "0300000000000000000000000000000000027400000000000000000000000000" +
+        "0000000002750001000000",
+        "0000000002000000000268000023840000066772616674000000000400000274" +
+        "3e7e65b039d337318511722a503ef5c200030000000000000000000000000000" +
+        "0200000000020000000001000000000000010000000000000000020000000002" +
+        "0000000001008000000000000302755325e80da2f3356ab173b2f8028b0e3300" +
+        "018000000000006401deadbeef00004000800000000000000f00018000000000" +
+        "8000000000"),
+      11 -> (
+        "0300000000000000000000000000000000027400000000000000000000000000" +
+        "00000000027500010000",
+        "0000000002000000000268000023840000066772616674000000000400000274" +
+        "3e7e65b039d337318511722a503ef5c200030000000000000000000000000000" +
+        "0200000000020000000001000000000000010000000000000000020000000002" +
+        "0000000001008000000000000302755325e80da2f3356ab173b2f8028b0e3300" +
+        "018000000000006401deadbeef00004000800000000000000f00018000000000" +
+        "00"),
+      12 -> (
+        "0300000000000000000000000000000000027400000000000000000000000000" +
+        "00000000027500010000",
+        "0000000002000000000268000023840000066772616674000000000400000274" +
+        "3e7e65b039d337318511722a503ef5c200030000000000000000000000000000" +
+        "0200000000020000000001000000000000010000000000000000020000000002" +
+        "0000000001008000000000000302755325e80da2f3356ab173b2f8028b0e3300" +
+        "018000000000006400deadbeef00004000800000000000000f00018000000000" +
+        "00")).foreach { case (v, (req, resp)) =>
+      assert(hex(writeMetadata(_, Some(Seq("t", "u")), version = v)) === req,
+        s"metadata v$v")
+      assert(hex(writeMetadataResponse(_, "h", 9092, described, v, Seq(unk))) ===
+        resp, s"metadata response v$v")
+      val (topics, allowAuto) = parsed(req)(readMetadata(_, v))
+      assert(topics.map(_.map(_._1)) === Some(Seq("t", "u")) && allowAuto,
+        s"metadata v$v")
+      val (host, port, mdTopics) = parsed(resp)(readMetadataResponse(_, v))
+      assert(host === "h" && port === 9092, s"metadata response v$v")
+      assert(mdTopics.map(t => (t.name, t.partitions.size, t.error)).take(2) ===
+        described, s"metadata response v$v")
+      assert(mdTopics.drop(2).map(_.topicId) === (if (v >= 10) Seq(unk) else Nil),
+        s"metadata response v$v")
+    }
+
+    // ApiVersions: the request body is empty before v3; the response
+    // lists SupportedApis, gains throttle_time_ms at v1 and turns
+    // flexible at v3 (header v0 still)
+    val n = SupportedApis.size
+    val table = SupportedApis.map { case (k, lo, hi) => f"$k%04x$lo%04x$hi%04x" }
+    Seq(
+      0 -> ("", f"0000$n%08x" + table.mkString),
+      1 -> ("", f"0000$n%08x" + table.mkString + "00000000"),
+      2 -> ("", f"0000$n%08x" + table.mkString + "00000000"),
+      3 -> ("0263023100",
+        f"0000${n + 1}%02x" + table.map(_ + "00").mkString + "00000000" + "00")
+    ).foreach { case (v, (req, resp)) =>
+      assert(hex(writeApiVersions(_, "c", "1", v)) === req, s"api versions v$v")
+      assert(hex(writeApiVersionsResponse(_, version = v)) === resp,
+        s"api versions response v$v")
+      parsed(req)(readApiVersions(_, v))
+      assert(parsed(resp)(readApiVersionsResponse(_, v)) === SupportedApis,
+        s"api versions response v$v")
+    }
+  }
 }
 
 /** CRC-32C Catalyst expression: correctness + codegen survival. */
@@ -183,14 +456,16 @@ class DecoderFuzzSpec extends AnyFunSuite with PropSupport {
       orderly(RecordBatchCodec.decode(bytes))
       orderly(WireProtocol.readHeader(buf))
       orderly(WireProtocol.readProduce(buf))
-      orderly(WireProtocol.readProduceV9(buf))
+      orderly(WireProtocol.readProduce(buf, 9))
       orderly(WireProtocol.readFetch(buf, 11))
-      orderly(WireProtocol.readFetchV12(buf, 16, _ => null))
+      orderly(WireProtocol.readFetch(buf, 16, _ => null))
       orderly(WireProtocol.readListOffsets(buf, 8))
       orderly(WireProtocol.readOffsetCommit(buf, 8))
       orderly(WireProtocol.readOffsetFetchV8(buf, 9))
       orderly(WireProtocol.readAddPartitionsToTxnV4(buf))
-      orderly(WireProtocol.readMetadataV9Full(buf, 12, _ => null))
+      orderly(WireProtocol.readMetadata(buf, 12, _ => null))
+      orderly(WireProtocol.readMetadata(buf, 1))
+      orderly(WireProtocol.readApiVersions(buf, 3))
       orderly(WireProtocol.readJoinGroup(buf, 9))
       orderly(WireProtocol.readCreateTopics(buf, 7))
       orderly(WireProtocol.readIncrementalAlterConfigs(buf, 1))
@@ -224,9 +499,9 @@ class DecoderFuzzSpec extends AnyFunSuite with PropSupport {
         sessionId = 42, sessionEpoch = 5,
         forgotten = Seq("alpha" -> Seq(2)))
       val b = buf()
-      writeFetchV12(b, req, v)
+      writeFetch(b, req, v)
       b.flip()
-      val got = readFetchV12(b, v, resolve)
+      val got = readFetch(b, v, resolve)
       assert(b.remaining() === 0, s"fetch v$v trailing bytes")
       assert(got.topics.map(t => t.topic -> t.partitions) ===
         req.topics.map(t => t.topic -> t.partitions), s"fetch v$v")
@@ -239,12 +514,12 @@ class DecoderFuzzSpec extends AnyFunSuite with PropSupport {
         Seq((77L, 3L)), Array[Byte](1, 2, 3)))
       val unk = java.util.UUID.fromString("deadbeef-0000-4000-8000-00000000000f")
       val b = buf()
-      writeFetchResponseV12(b, Seq("alpha" -> parts), 0, 42, 0, v,
+      writeFetchResponse(b, Seq("alpha" -> parts), v, 0, 42, 0,
         unknownIds = Seq(unk -> Seq(FetchV12PartResult(5, 100, -1L, -1L,
           -1L, Nil, Array.empty[Byte]))))
       b.flip()
-      val got = readFetchResponseV12(b, v,
-        u => Option(resolve(u)).getOrElse(if (u == unk) "UNK" else null))
+      val got = readFetchResponse(b, v,
+        u => Option(resolve(u)).getOrElse(if (u == unk) "UNK" else null))._3
       assert(b.remaining() === 0, s"fetch resp v$v trailing bytes")
       assert(got.map(_._1) === Seq("alpha", "UNK"), s"fetch resp v$v")
       assert(got.head._2.head.aborted === Seq((77L, 3L)))
@@ -294,10 +569,10 @@ class DecoderFuzzSpec extends AnyFunSuite with PropSupport {
     (9 to 12).foreach { v =>
       val b = buf()
       val unk = java.util.UUID.fromString("deadbeef-1111-4000-8000-000000000001")
-      writeMetadataResponseV9(b, "h", 9092, Seq(("alpha", 2, 0.toShort)), v,
+      writeMetadataResponse(b, "h", 9092, Seq(("alpha", 2, 0.toShort)), v,
         unknownIds = Seq(unk))
       b.flip()
-      val (host, port, ts) = readMetadataResponseV9(b, v)
+      val (host, port, ts) = readMetadataResponse(b, v)
       assert(b.remaining() === 0, s"metadata v$v trailing bytes")
       assert(host === "h" && port === 9092)
       assert(ts.head.name === "alpha" && ts.head.partitions === Seq(0, 1))

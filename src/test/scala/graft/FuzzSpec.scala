@@ -129,7 +129,7 @@ class FuzzSpec extends AnyFunSuite with PropSupport {
   private val requestReaders: Seq[(String, ByteBuffer => Any)] = Seq(
     "readHeader" -> (b => W.readHeader(b)),
     "readProduce" -> (b => W.readProduce(b)),
-    "readProduceV9" -> (b => W.readProduceV9(b)),
+    "readProduce_v9" -> (b => W.readProduce(b, 9)),
     "readFetch_v4" -> (b => W.readFetch(b, 4)),
     "readListOffsets_v1" -> (b => W.readListOffsets(b, 1)),
     "readOffsetCommit_v2" -> (b => W.readOffsetCommit(b, 2)),
@@ -147,14 +147,17 @@ class FuzzSpec extends AnyFunSuite with PropSupport {
     "readListGroups_v0" -> (b => W.readListGroups(b, 0)),
     "readDeleteGroups_v0" -> (b => W.readDeleteGroups(b, 0)),
     "readOffsetDelete" -> (b => W.readOffsetDelete(b)),
-    "readMetadataV9" -> (b => W.readMetadataV9(b)),
-    "readApiVersionsV3" -> (b => W.readApiVersionsV3(b)),
+    "readMetadata_v9" -> (b => W.readMetadata(b, 9)),
+    "readApiVersions_v3" -> (b => W.readApiVersions(b, 3)),
     "readCompactBytes" -> (b => W.readCompactBytes(b)),
     "readCompactString" -> (b => W.readCompactString(b)),
     "skipTaggedFields" -> (b => W.skipTaggedFields(b)),
     // versioned / flexible variants: the compact-codec paths have their
     // own length and tagged-field handling, so they fuzz separately
     "readFetch_v12" -> (b => W.readFetch(b, 12)),
+    "readFetch_v16" -> (b => W.readFetch(b, 16, _ => null)),
+    "readMetadata_v1" -> (b => W.readMetadata(b, 1)),
+    "readMetadata_v12" -> (b => W.readMetadata(b, 12, _ => null)),
     "readJoinGroup_v6" -> (b => W.readJoinGroup(b, 6)),
     "readSyncGroup_v5" -> (b => W.readSyncGroup(b, 5)),
     "readOffsetCommit_v8" -> (b => W.readOffsetCommit(b, 8)),
@@ -166,7 +169,6 @@ class FuzzSpec extends AnyFunSuite with PropSupport {
     "readTxnOffsetCommit_v3" -> (b => W.readTxnOffsetCommit(b, 3)),
     "readDeleteRecords_v2" -> (b => W.readDeleteRecords(b, 2)),
     "readDescribeConfigs_v4" -> (b => W.readDescribeConfigs(b, 4)),
-    "readMetadataV9Full" -> (b => W.readMetadataV9Full(b)),
     "readSaslAuthenticate_v2" -> (b => W.readSaslAuthenticate(b, 2)),
     "readListOffsets_v6" -> (b => W.readListOffsets(b, 6)),
     "readHeartbeat_v4" -> (b => W.readHeartbeat(b, 4)),
@@ -198,7 +200,7 @@ class FuzzSpec extends AnyFunSuite with PropSupport {
       }
     }
     val elapsed = (System.nanoTime() - t0) / 1e9
-    // generous ceiling: 47k constant-time rejections take well under a
+    // generous ceiling: 49k constant-time rejections take well under a
     // second; an ALLOCATION-driven decode of 2 GB declared lengths would
     // take minutes (or OOM). The slack absorbs loaded-box scheduling
     // noise without masking the regression class this pins.
