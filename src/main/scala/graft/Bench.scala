@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"runs":R,"sf":...}.
@@ -54,8 +52,8 @@ import org.apache.spark.sql.SparkSession
   * from the plan-keyed CacheManager entries of run 1 (the r15 verdict's
   * gaming finding: q_ppjoin's 3-run median reflected cross-run cache
   * reuse, not the optimization). Numbers before/after this change are
-  * NOT comparable for persist-bearing ops; OPTIMIZATION_r16.md restates
-  * the r15 claims against the cold bench.
+  * NOT comparable for persist-bearing ops; restating the r15 claims
+  * against cold numbers is open under ROADMAP item 1.
   */
 object Bench {
   /** Fixed-work single-thread calibration: ~0.3 s on a healthy core.
@@ -129,7 +127,7 @@ object Bench {
     def elapsed(): Double = (System.nanoTime() - tMain0) / 1e9
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val baseRuns = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_RUNS", "5").toInt)
     val budget = math.max(60.0,
@@ -138,32 +136,9 @@ object Bench {
     val load0 = readLoadAvg()
     val mem0 = readMemAvailGb()
     val calib0 = calibrate()
-    val calibP0 = calibratePar(cpus.toInt)
+    val calibP0 = calibratePar(cpus)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Size shuffles to the DATA, not the core count: the gram-explode
-      // family funnels a ~4·|words| stream through distinct/aggregate,
-      // and at a fixed 32 partitions each reduce task holds 1/32 of the
-      // gram stream in its hash map — under box memory pressure that
-      // spills and the family degrades 3-7× (driver's BENCH_r13 vs the
-      // committed artifact). With a high AQE initial partition count
-      // the big shuffles get data-proportional task counts (smaller
-      // per-task working sets, graceful under pressure) while AQE
-      // coalesces every small shuffle back down, so the rest of the
-      // board pays nothing. This is the in-session analogue of the
-      // SPARK_GRAFT_SHUFFLE=256 fix from the r12 deep probe.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_MAX", "256"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.silenceExpectedWindowWarnings()
+    val spark = Sessions.local(cpus, "graft-bench")
 
     // SPARK_GRAFT_ONLY=q_a,q_b limits the run to a subset (local iteration).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -283,7 +258,7 @@ object Bench {
     }
 
     val calib1 = calibrate()
-    val calibP1 = calibratePar(cpus.toInt)
+    val calibP1 = calibratePar(cpus)
     val line = jsonLine(results.toSeq, partial = false, calibEnd = calib1,
       calibParEnd = calibP1)
     println(line)

@@ -28,12 +28,10 @@ object Dedup {
   val MinhashP = 2147483647L
 
   /** Doc-count threshold above which the gram-pair family persists its
-    * pruned posting list (the GramCacheProbe-measured crossover —
-    * BASELINE r14). private[graft] and @volatile so the PROBE ITSELF
-    * can disable the persist when measuring the uncached arm at the
-    * big decades; production callers never touch it.
+    * pruned posting list: the measured cached/uncached crossover
+    * (BASELINE.md r14, "prunedGramIntersections cache trade-off").
     */
-  @volatile private[graft] var gramCacheThresholdDocs: Long = 100000L
+  private val gramCacheThresholdDocs: Long = 100000L
 
   /** Linear hash family over a base 31-bit hash: h_k(x) = (a_k*x + b_k)
     * mod P. One md5 per shingle total — the per-k hashes are pure
@@ -852,7 +850,7 @@ object Dedup {
       .distinct()
     // The pruned posting list feeds four consumers (df filter, both
     // join sides, per-doc sizes). Whether to materialize it is
-    // SIZE-CONDITIONAL, measured across four decades (GramCacheProbe,
+    // SIZE-CONDITIONAL, measured across four decades (cache trade-off,
     // BASELINE r14): below ~100k docs the uncached recompute wins —
     // codegen fusion keeps each consumer one scan→explode→join pipeline
     // and the explode is cheaper than cache write+read (sf0.1 ratio

@@ -354,20 +354,10 @@ final class ParquetStorage(spark: SparkSession, root: String,
       .withColumn("is_control", lit(false))
       .withColumn("control_type", lit(null).cast("string"))
 
-    // lake-ONLY topic (`lake.sink=true`, schema-backed): records land
-    // in the typed lake table and never as log objects — the analytics
-    // ingestion mode where nothing consumes the topic as a stream.
-    // Offsets still reserve durably (watermark.json is independent of
-    // batch files), so restart recovery never reuses an offset; fetch
-    // sees an empty log by design.
-    val lakeOnly = schema.nonEmpty &&
-      topicConfig(tp.topic).get(ConfigKey.LakeSink)
-        .exists(_.equalsIgnoreCase("true"))
-
     // write to a temp dir, then atomic-rename to publish — readers never
     // see a half-written batch (the PutMode::Create analog,
     // dynostore.rs:992-1014)
-    if (!lakeOnly) {
+    if (!lakeOnly(tp.topic, schema)) {
       val tmpDir = f"${partDir(tp)}/.tmp_$base%020d"
       withOffsets.coalesce(1).write.mode("overwrite").parquet(tmpDir)
       Files.move(Paths.get(tmpDir),
@@ -390,6 +380,18 @@ final class ParquetStorage(spark: SparkSession, root: String,
 
     Right(base)
   }
+
+  /** A lake-ONLY topic (`lake.sink=true`, schema-backed): records land
+    * in the typed lake table and never as log objects — the analytics
+    * ingestion mode where nothing consumes the topic as a stream.
+    * Offsets still reserve durably (watermark.json is independent of
+    * batch files), so restart recovery never reuses an offset; fetch
+    * sees an empty log by design.
+    */
+  private def lakeOnly(topic: String,
+                       schema: Option[SchemaRegistry.TopicSchema]): Boolean =
+    schema.nonEmpty &&
+      topicConfig(topic).get(ConfigKey.LakeSink).exists(_.equalsIgnoreCase("true"))
 
   /** Annotate a batch with an `__invalid` flag from the topic's schema
     * (reference dynostore.rs:885-898): undecodable Avro payloads and
@@ -567,15 +569,17 @@ final class ParquetStorage(spark: SparkSession, root: String,
       .withColumn("base_sequence", lit(-1))
       .withColumn("is_control", lit(false))
       .withColumn("control_type", lit(null).cast("string"))
-    val tmpRoot = Paths.get(
-      s"$root/.produce/$topic-${java.util.UUID.randomUUID()}")
-    withOffsets.withColumn("__p", col("partition"))
-      .write.partitionBy("__p").mode("overwrite").parquet(tmpRoot.toString)
-    bases.foreach { case (p, base) =>
-      Files.move(tmpRoot.resolve(s"__p=$p"),
-        Paths.get(partDir(Topition(topic, p)), f"$base%020d.parquet"))
+    if (!lakeOnly(topic, schema)) {
+      val tmpRoot = Paths.get(
+        s"$root/.produce/$topic-${java.util.UUID.randomUUID()}")
+      withOffsets.withColumn("__p", col("partition"))
+        .write.partitionBy("__p").mode("overwrite").parquet(tmpRoot.toString)
+      bases.foreach { case (p, base) =>
+        Files.move(tmpRoot.resolve(s"__p=$p"),
+          Paths.get(partDir(Topition(topic, p)), f"$base%020d.parquet"))
+      }
+      deleteRecursive(tmpRoot)
     }
-    deleteRecursive(tmpRoot)
     schema.foreach(lakeSink(topic, _, withOffsets, counts.values.sum))
     Right(bases)
   }

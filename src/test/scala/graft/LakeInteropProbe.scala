@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** External-reader interop probe — the testable half of the reference's
@@ -17,13 +16,7 @@ object LakeInteropProbe {
   val TableDir = "/tmp/graft-lake-interop/docs"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8, "graft-lake-interop")
     val root = java.nio.file.Paths.get(TableDir)
     if (java.nio.file.Files.exists(root)) {
       import scala.jdk.CollectionConverters._

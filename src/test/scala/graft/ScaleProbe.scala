@@ -1,29 +1,29 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale probe (test-scope main): measures the five heaviest bench
-  * queries at sf0.01, sf0.1, and a synthesized 10×-sf0.1 corpus, and
-  * prints the per-decade scaling exponent — turning the "this plan is
-  * scale-safe" claims into measured evidence.
+/** Scale-probe corpus (test scope): a copies×-sf0.1 documents and
+  * embeddings set, the decades above the shipped testdata. The
+  * relational tables of the same decade come from `tools/make_sfprobe.py`.
   *
-  * The 10× corpus replicates sf0.1 documents/embeddings with per-copy
-  * id offsets; each copy's TOKENS are suffixed `_<copy>` so copies are
+  * The corpus replicates sf0.1 documents/embeddings with per-copy id
+  * offsets; each copy's TOKENS are suffixed `_<copy>` so copies are
   * textually independent (no cross-copy near-dups — the corpus grows
   * horizontally, the per-copy duplicate structure is preserved, and
   * dedup-family growth measures the PLAN, not a synthetic dup
-  * explosion). Embeddings perturb per copy to keep vectors distinct.
+  * explosion).
   *
-  * Run: `sbt "Test/runMain graft.ScaleProbe"`.
+  *   sbt "Test/runMain graft.ScaleProbe [dstDir] [copies]"
+  *   sbt "Test/runMain graft.Profile q_a,q_b /root/testdata/sf0.01 \
+  *     /root/testdata/sf0.1 /tmp/graft-sfprobe"
+  *
+  * dstDir defaults to /tmp/graft-sfprobe and copies to 10.
   */
 object ScaleProbe {
 
-  private val Queries = Seq("q_quality_ensemble", "q_ivfpq_adc",
-    "q_dedup_clusters", "q_keep_canonical", "q_dedup_ngram")
-
-  private[graft] def synthesize(spark: SparkSession, src: String,
-                                dst: String, copies: Int): Unit = {
+  private def synthesize(spark: SparkSession, src: String,
+                         dst: String, copies: Int): Unit = {
     val root = java.nio.file.Paths.get(dst)
     if (java.nio.file.Files.exists(root.resolve("documents.parquet")) &&
         java.nio.file.Files.exists(root.resolve("embeddings.parquet"))) return
@@ -60,146 +60,12 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$dst/embeddings.parquet")
   }
 
-  /** Hot-domain variant: collapse 90% of docs into ONE `source` value —
-    * the exact skew `domainCapSample` exists for. A per-domain window
-    * would funnel those rows through one sorting task; the salted
-    * two-phase form must keep its exponent flat instead of degrading
-    * toward a single-straggler n·log n.
-    */
-  private def hotify(spark: SparkSession, src: String, dst: String): Unit = {
-    val root = java.nio.file.Paths.get(dst)
-    if (java.nio.file.Files.exists(root.resolve("documents.parquet"))) return
-    java.nio.file.Files.createDirectories(root)
-    spark.read.parquet(s"$src/documents.parquet")
-      .withColumn("source",
-        when(col("doc_id") % 10 =!= 0, lit("hot.example"))
-          .otherwise(col("source")))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dst/documents.parquet")
-  }
-
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_SHUFFLE: per-task-memory knob for the deep decades —
-    // a 100x corpus on the SAME 32 cores needs smaller tasks to avoid
-    // spill, the local analogue of a cluster's proportional parallelism
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      // data-sized shuffles (see Bench.scala): the deep decades probe
-      // under the SAME adaptive wide-start/coalesce regime the bench
-      // runs, so probe exponents measure the shipped configuration
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_MAX", "256"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.silenceExpectedWindowWarnings()
-    val probeDir = "/tmp/graft-sfprobe"
-    synthesize(spark, "/root/testdata/sf0.1", probeDir, copies = 10)
-    val hotMode = args.contains("hotdomain")
-    // "deep" adds a FOURTH decade: 100x-sf0.1 (500k docs / 200k vecs) —
-    // the heavy family must hold its exponent across two synthetic
-    // decades, not just one, before "sublinear" is a believable claim
-    val deepMode = args.contains("deep")
-    val deepDir = "/tmp/graft-sfprobe100"
-    if (deepMode) synthesize(spark, "/root/testdata/sf0.1", deepDir, copies = 100)
-    val dirs = if (hotMode) {
-      val hotRoot = "/tmp/graft-hotprobe"
-      hotify(spark, "/root/testdata/sf0.01", s"$hotRoot/sf0.01")
-      hotify(spark, "/root/testdata/sf0.1", s"$hotRoot/sf0.1")
-      hotify(spark, probeDir, s"$hotRoot/sf1x")
-      Seq("sf0.01" -> s"$hotRoot/sf0.01", "sf0.1" -> s"$hotRoot/sf0.1",
-        "sf1x" -> s"$hotRoot/sf1x")
-    } else Seq("sf0.01" -> "/root/testdata/sf0.01",
-      "sf0.1" -> "/root/testdata/sf0.1", "sf1x" -> probeDir) ++
-      (if (deepMode) Seq("sf10x" -> deepDir) else Nil)
-    // default: the five heaviest; "all" sweeps every query that can run
-    // on the documents/embeddings-only probe corpus (the rest need
-    // TPC-H tables the probe does not synthesize and are skipped)
-    val deepQueries = Seq("q_quality_ensemble", "q_pagerank",
-      "q_dedup_ngram", "q_keep_canonical", "q_phash_pairs", "q_domain_cap")
-    val explicit = args.filterNot(Set("deep", "hotdomain", "all")).toSeq
-    val wanted =
-      if (hotMode) Seq("q_domain_cap")
-      else if (deepMode && explicit.nonEmpty) explicit
-      else if (deepMode) deepQueries
-      else if (args.contains("all")) SparkEntry.queries.keys.toSeq.sorted
-      else if (explicit.nonEmpty) explicit
-      else Queries
-    def run(q: String, dir: String): Option[Double] =
-      try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    // warm each decade's FILES once (sequential read into the page
-    // cache): the first query to touch a freshly-synthesized decade
-    // otherwise pays the whole corpus read — a constant of this box's
-    // disk, not a property of the plan (round 13 measured q3 at 38.7 s
-    // cold vs 12.6 s warm at 100x — a 3x distortion of its exponent).
-    // On a real cluster the cold read exists too, but IO bandwidth
-    // scales with the executor count; the exponent we are probing is
-    // compute/shuffle scaling.
-    def warmFiles(dir: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.exists(root)) return
-      val buf = new Array[Byte](1 << 20)
-      scala.util.Using.resource(java.nio.file.Files.walk(root)) { st =>
-        st.iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p))
-          .foreach { p =>
-            val in = java.nio.file.Files.newInputStream(p)
-            try { while (in.read(buf) >= 0) () } finally in.close()
-          }
-      }
-    }
-    dirs.foreach { case (_, d) => warmFiles(d) }
-    // steady-state at the SYNTHETIC decades: min of two runs. The first
-    // execution of a query at 10x/100x pays one-time JVM costs the
-    // smaller decades never trigger (codegen+JIT of the post-gate
-    // SMJ/sort paths, lazy broadcast-block cleanup) — round 13 measured
-    // q3 at 49 s first-run vs 12.6 s steady at 100x, a 4x distortion of
-    // the decade ratio that says nothing about the plan.
-    def runBest(q: String, name: String, dir: String): Option[Double] =
-      (run(q, dir), if (name == "sf1x" || name == "sf10x") run(q, dir)
-       else None) match {
-        case (Some(a), Some(b)) => Some(math.min(a, b))
-        case (first, _) => first
-      }
-    // warm classloading/codegen on the smallest scale first
-    val runnable = wanted.filter(q => run(q, "/root/testdata/sf0.001").nonEmpty)
-    val skipped = wanted.filterNot(runnable.contains)
-    if (skipped.nonEmpty)
-      println(s"PROBE-SKIP (need tables beyond documents/embeddings or " +
-        s"failed warmup): ${skipped.mkString(", ")}")
-    val exps = runnable.flatMap { q =>
-      val ts = dirs.map { case (name, dir) => name -> runBest(q, name, dir) }
-      val m = ts.collect { case (n, Some(t)) => n -> t }.toMap
-      if (m.size < dirs.size) { println(s"PROBE-SKIP $q (failed at scale)"); None }
-      else {
-        // exponent per decade of data: log10(t_next / t_prev)
-        val e1 = math.log10(m("sf0.1") / m("sf0.01"))
-        val e2 = math.log10(m("sf1x") / m("sf0.1"))
-        val deep = m.get("sf10x").map(t => math.log10(t / m("sf1x")))
-        val deepStr = deep.map(e3 =>
-          f" sf10x=${m("sf10x")}%8.2fs exp(1x->10x)=$e3%5.2f").getOrElse("")
-        println(f"PROBE $q%-22s sf0.01=${m("sf0.01")}%6.2fs sf0.1=${m("sf0.1")}%6.2fs " +
-          f"sf1x=${m("sf1x")}%7.2fs exp(0.01->0.1)=$e1%5.2f exp(0.1->1x)=$e2%5.2f" +
-          deepStr)
-        Some(q -> deep.getOrElse(e2))
-      }
-    }
-    if (exps.size > 1) {
-      val sorted = exps.map(_._2).sorted
-      val med = sorted(sorted.size / 2)
-      val worst = exps.maxBy(_._2)
-      println(f"PROBE-SUMMARY n=${exps.size} median_exp=$med%5.2f " +
-        f"max_exp=${worst._2}%5.2f (${worst._1})")
-    }
+    val dst = args.headOption.getOrElse("/tmp/graft-sfprobe")
+    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
+    val spark = Sessions.local(Runtime.getRuntime.availableProcessors,
+      "graft-scaleprobe")
+    synthesize(spark, "/root/testdata/sf0.1", dst, copies)
     spark.stop()
   }
 }

@@ -153,12 +153,15 @@ class StorageSpec extends SparkSpec {
       .toDF("timestamp", "key", "value")
     assert(st.produce(ptp, good) === Right(0L))
     assert(st.produce(ptp, good) === Right(1L)) // offsets still advance
-    // the lake table holds both rows; the LOG holds none (no objects)
-    assert(spark.read.parquet(s"$root/lake/person").count() === 2)
+    // the routed (streaming ingest) path obeys the same config
+    assert(st.produceAll("person", good.withColumn("partition", lit(0))) ===
+      Right(Map(0 -> 2L)))
+    // the lake table holds every row; the LOG holds none (no objects)
+    assert(spark.read.parquet(s"$root/lake/person").count() === 3)
     assert(st.fetch(ptp, 0, Long.MaxValue).count() === 0)
     // durable offsets: a fresh process over the same root keeps counting
     // (watermark.json is independent of batch files)
-    assert(mkStorage().produce(ptp, good) === Right(2L))
+    assert(mkStorage().produce(ptp, good) === Right(3L))
   }
 
   test("lake.normalize flattens the lake table with the configured separator") {

@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
-"""Synthesize the 10x-sf0.1 RELATIONAL probe tables for ScaleProbe.
+"""Synthesize the 10x-sf0.1 RELATIONAL probe tables of a scale-probe decade.
 
 Replicates the TPC-H-ish tables with per-copy key offsets so every
 foreign key stays consistent WITHIN a copy (l_orderkey+K joins
 o_orderkey+K, etc.) — the corpus grows horizontally, join selectivity
 and group sizes are preserved per copy. Dimensions (region, nation)
 stay single-copy: they are broadcast sides keyed from both copies.
-documents/embeddings come from ScaleProbe's own Scala synthesis.
+documents/embeddings of the same decade come from
+`sbt "Test/runMain graft.ScaleProbe [dstDir] [copies]"`; profile the
+decades with `sbt "Test/runMain graft.Profile <queries> /root/testdata/sf0.01
+/root/testdata/sf0.1 <dstDir>"`.
 
 Usage: make_sfprobe.py [srcDir] [dstDir] [copies]
 """
